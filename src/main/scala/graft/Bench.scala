@@ -28,8 +28,10 @@ object Bench {
     val only: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
     // cpus as a JSON value: numeric when it is one (the contract), quoted
-    // otherwise (e.g. local[*]) so the artifact line stays parseable
-    val cpusJson = if (cpus.forall(_.isDigit)) cpus else "\"" + cpus + "\""
+    // otherwise (e.g. local[*], or an empty value) so the artifact line
+    // stays parseable
+    val cpusJson =
+      if (cpus.nonEmpty && cpus.forall(_.isDigit)) cpus else "\"" + cpus + "\""
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -70,14 +72,25 @@ object Bench {
     // Two timed passes, min per query: a single local[32] JVM shows
     // intermittent multi-second scheduler/compilation glitches that are
     // not properties of the plan — min-of-2 reports the plan's real cost.
-    def pass(): Map[String, Double] =
+    // A query that THROWS in either pass has no timing (the time up to
+    // the exception measures nothing): it stays out of the timings and
+    // is listed under "failed".
+    def pass(): Map[String, Option[Double]] =
       picked.toSeq.sortBy(_._1).map { case (name, fn) =>
         val t0 = System.nanoTime()
-        try { force(fn(spark, sfDir)) } catch { case _: Throwable => -1L }
-        name -> (System.nanoTime() - t0) / 1e9
+        val ok =
+          try { force(fn(spark, sfDir)); true }
+          catch { case _: Throwable => false }
+        name -> Option.when(ok)((System.nanoTime() - t0) / 1e9)
       }.toMap
     val p1 = pass(); val p2 = pass()
-    val results = p1.map { case (k, v) => k -> math.min(v, p2(k)) }
+    val failed = p1.keys.filter(k => p1(k).isEmpty || p2(k).isEmpty)
+      .toSeq.sorted
+    val results = p1.collect {
+      case (k, Some(a)) if p2(k).isDefined => k -> math.min(a, p2(k).get)
+    }
+    def jsonNames(ns: Seq[String]): String =
+      ns.map("\"" + _ + "\"").mkString("[", ",", "]")
 
     // relay pipeline throughput: envelope → mod-filter → per-partition
     // ordered scan, fully consumed. Like the per-query timings, each
@@ -100,7 +113,8 @@ object Bench {
         "\"" + k + "\":" + (math.round(v * 1000) / 1000.0) }
         .mkString("{", ",", "}")
       println(s"""{"metric":"total","value":${results.values.sum},""" +
-        s""""unit":"sec","queries":$qs,"cpus":$cpusJson,"sf":"$sfDir"}""")
+        s""""unit":"sec","queries":$qs,"failed":${jsonNames(failed)},""" +
+        s""""cpus":$cpusJson,"sf":"$sfDir"}""")
       spark.stop()
       return
     }
@@ -135,8 +149,9 @@ object Bench {
     // per-query maps ran ~3.1KB. Layout: a small headline "queries" map
     // (driver-contract key), then EVERY timing as integer milliseconds in
     // "qms", ordered by sorted query name ("qnames" order = the sorted
-    // key set of SparkEntry.queries filtered to this run, recoverable
-    // from the repo alone), plus the untimed-elsewhere "setup_sec" row.
+    // key set of SparkEntry.queries filtered to this run, minus the
+    // "failed" names — recoverable from the repo alone), plus the
+    // untimed-elsewhere "setup_sec" row.
     // The full-precision named map still goes to /tmp/graft_bench.json.
     val names = results.keys.toSeq.sorted
     val headline = Seq("q1_agg", "q3_join", "q5_join", "q_capture_txlog",
@@ -155,9 +170,10 @@ object Bench {
     val setupR = math.round(setupSec * 1000) / 1000.0
     val fullMap = names.map(n => "\"" + n + "\":" + results(n))
       .mkString("{", ",", "}")
-    val line =
+    def lineWith(failedJson: String): String =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-      s""""qn":${names.size},"qms":$qms,"setup_sec":$setupR,""" +
+      s""""qn":${names.size},"qms":$qms,"failed":$failedJson,""" +
+      s""""setup_sec":$setupR,""" +
       s""""relay_events_per_sec":${eventsPerSec.round},"relay_events":$nEvents,""" +
       s""""relay_binary_events_per_sec":${binEps.round},""" +
       s""""relay_wire_events_per_sec":${wireEps.round},""" +
@@ -175,10 +191,19 @@ object Bench {
       // without inferring it from per-query ratios
       s""""cpus":$cpusJson,""" +
       s""""sf":"$sfDir"}"""
+    // the failed list must not push the line past the ~2000-char stdout
+    // budget (sbt's trailer shares it): it keeps the names that fit and
+    // counts the rest — the sidecar file always carries the full list
+    val line = (failed.length to 0 by -1).iterator.map { n =>
+      val more =
+        if (n < failed.length) Seq(s"+${failed.length - n} more") else Nil
+      lineWith(jsonNames(failed.take(n) ++ more))
+    }.find(_.length < 1900).getOrElse(lineWith("[]"))
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("/tmp/graft_bench.json"),
       s"""{"metric":"total","value":$total,"unit":"sec","setup_sec":$setupSec,""" +
-      s""""queries":$fullMap,"sf":"$sfDir"}""" + "\n")
+      s""""queries":$fullMap,"failed":${jsonNames(failed)},"sf":"$sfDir"}""" +
+      "\n")
     catch { case _: Throwable => () }
     println(line)
     spark.stop()

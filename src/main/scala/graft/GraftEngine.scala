@@ -138,14 +138,6 @@ class GraftEngine(val spark: SparkSession, eventLogDir: String,
 
   // ---- binary relay log (the graft-relay DataSource V2) ----
 
-  /** DbusEventV2 wire-format segment log (the reference's exact binary
-    * layout, §1.2): write from an envelope-with-payload frame; serve the
-    * segments through [[streamBinary]] — the DataSource dispatches on the
-    * `.dbusv2` extension. */
-  def writeWireLog(envelopeWithPayload: DataFrame, dir: String,
-      numSegments: Int = 8): Unit =
-    graft.sources.relay.DbusV2Log.write(envelopeWithPayload, dir, numSegments)
-
   /** Materialize the engine's binary segment log (DbusEventV2-analog
     * format) from an envelope frame; serve it via [[streamBinary]]. */
   def writeBinaryLog(envelope: DataFrame, dir: String, numSegments: Int = 8): Unit =

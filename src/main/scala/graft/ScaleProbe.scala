@@ -313,8 +313,8 @@ object ScaleProbe {
 
     if (args.contains("annbatch")) {
       // BATCH-REGIME serving at the scale it exists for: a CORPUS-SIZED
-      // query batch through ivfQuantizedTopKFromStoreBatch (round 14's
-      // shuffle regime, spec-proven correct but never measured at its
+      // query batch through ivfQuantizedTopKFromStore's shuffle regime
+      // (round 14's, spec-proven correct but never measured at its
       // stated workload). Geometry is the scale-honest k ∝ N (constant
       // ~25-vector cells: 2,000 vectors / k=80 at sf0.1, 20,000 / 800
       // at sf1 — the semdedup-kN adjudication's shape): the
@@ -340,8 +340,9 @@ object ScaleProbe {
           graft.sources.WireFixtures.annOrganicIndexDir(spark, dir, k = k)
         val all = vecsOf(dir)
         minOf2(() => Bench.force(
-          graft.pipeline.Ann.ivfQuantizedTopKFromStoreBatch(
-            all, all, store, k = 10, nProbe = 2)))
+          graft.pipeline.Ann.ivfQuantizedTopKFromStore(
+            all, all, store, k = 10, nProbe = 2,
+            regime = graft.pipeline.Ann.Shuffle)))
       }
       // extra args filter the legs (int8 / ivfpq / pinned) so each can
       // run in its own JVM — the sf100 probe-hygiene rule applied here
@@ -356,8 +357,9 @@ object ScaleProbe {
         val b = annBatchLeg(DerivedDir, 800)
         println(f"${"q_ann_batch (k∝N)"}%-22s $a%8.2f $b%8.2f  ${b / a}%5.1f×")
       }
-      // the COMPRESSED tier's corpus-sized regime (ivfPqTopKFromStoreBatch
-      // — the stated 100 TB serving path) at the same k ∝ N geometry:
+      // the COMPRESSED tier's corpus-sized regime (ivfPqTopKFromStore
+      // under Ann.Shuffle — the stated 100 TB serving path) at the same
+      // k ∝ N geometry:
       // residual ADC LUTs (m=8) ride the distributed probe frame, so the
       // decade measures the LUT projection + cell_id hash join + min-ADC
       // rerank at growing scale, store build (both quantizers) outside
@@ -366,8 +368,9 @@ object ScaleProbe {
         val store = graft.sources.WireFixtures.ivfPqOrganicIndexDir(
           spark, dir, k = k, m = 8)
         val all = vecsOf(dir)
-        minOf2(() => Bench.force(graft.pipeline.Ann.ivfPqTopKFromStoreBatch(
-          all, all, store, k = 10, nProbe = 2)))
+        minOf2(() => Bench.force(graft.pipeline.Ann.ivfPqTopKFromStore(
+          all, all, store, k = 10, nProbe = 2,
+          regime = graft.pipeline.Ann.Shuffle)))
       }
       if (wantLeg("ivfpq")) {
         val a = ivfPqBatchLeg(base, 80)
@@ -395,14 +398,16 @@ object ScaleProbe {
         def pinnedBatchLeg(dir: String, k: Int): (Double, Double) = {
           val store =
             graft.sources.WireFixtures.annOrganicIndexDir(spark, dir, k = k)
-          val pin = graft.pipeline.Ann.pinIndex(store)
+          val pin = graft.pipeline.VersionedStore.pin(store, "cells")
           val all = vecsOf(dir)
           val head = minOf2(() => Bench.force(
-            graft.pipeline.Ann.ivfQuantizedTopKFromStoreBatch(
-              all, all, store, k = 10, nProbe = 2)))
+            graft.pipeline.Ann.ivfQuantizedTopKFromStore(
+              all, all, store, k = 10, nProbe = 2,
+              regime = graft.pipeline.Ann.Shuffle)))
           val pinned = minOf2(() => Bench.force(
-            graft.pipeline.Ann.ivfQuantizedTopKFromStoreBatchPinned(
-              all, all, store, k = 10, pin, nProbe = 2)))
+            graft.pipeline.Ann.ivfQuantizedTopKFromStore(
+              all, all, store, k = 10, nProbe = 2, at = pin,
+              regime = graft.pipeline.Ann.Shuffle)))
           (head, pinned)
         }
         val (ha, pa) = pinnedBatchLeg(base, 80)
@@ -426,11 +431,7 @@ object ScaleProbe {
       // change.
       deriveNext(spark, DerivedDir, Derived10Dir, level = 2)
       def du(dir: String): Long =
-        graft.pipeline.StoreFs.listFileStatusesRecursive(dir)
-          .map { case (p, _, _) =>
-            try java.nio.file.Files.size(java.nio.file.Paths.get(
-              p.stripPrefix("file:"))) catch { case _: Throwable => 0L }
-          }.sum
+        graft.pipeline.StoreFs.listFileStatusesRecursive(dir).map(_._4).sum
       def minOf2(run: () => Unit): Double = {
         def once(): Double = {
           val t0 = System.nanoTime(); run()

@@ -971,21 +971,17 @@ object SparkEntry {
       val store = s"$root/store"
       Dedup.writeSignatureStore(slice(0), store, batchId = Some(0L))
       Dedup.appendToSignatureStoreBatch(slice(1), store, 1L)
-      val pin = Dedup.pinSignatureStore(store)
+      val pin = graft.pipeline.VersionedStore.pin(store, "sigs")
       Dedup.appendToSignatureStoreBatch(slice(2), store, 2L)
       Dedup.compactSignatureStore(s, store, keepGenerations = 1)
       def verified(pairs: org.apache.spark.sql.DataFrame) =
         Dedup.ngramJaccardVerify(corpus,
             broadcast(pairs.select("id_a", "id_b")))
           .where(col("jaccard") >= 0.8)
-      val headBanded = Dedup.readBandedStore(s, store)
-      val headPairs = Dedup.estimatePairsFromSignatures(
-        Dedup.incrementalCandidatesFromBanded(headBanded, headBanded),
-        Dedup.readSignatureStore(s, store), jaccardThreshold = 0.5)
-      verified(Dedup.nearDupPairsFromStorePinned(s, store, pin))
+      verified(Dedup.nearDupPairsFromStore(s, store, at = pin))
         .withColumn("probe_view", lit("pinned"))
-        .unionByName(
-          verified(headPairs).withColumn("probe_view", lit("head")))
+        .unionByName(verified(Dedup.nearDupPairsFromStore(s, store))
+          .withColumn("probe_view", lit("head")))
     }),
 
     // ---- CDC-maintained SIGNATURE store — the production streaming
@@ -2226,9 +2222,10 @@ object SparkEntry {
       (0 until 3).foreach(b =>
         graft.pipeline.Retrieval.appendToPostingsIndexBatch(
           d.where(col("doc_id") % 3 === b), s"$root/index", b))
+      val asOf = graft.pipeline.VersionedStore.AsOf(1L)
       graft.pipeline.Retrieval.bm25TopKFromIndex(
-        graft.pipeline.Retrieval.readPostingsIndexAsOf(s, s"$root/index", 1L),
-        graft.pipeline.Retrieval.readDocLengthsAsOf(s, s"$root/index", 1L),
+        graft.pipeline.Retrieval.readPostingsIndex(s, s"$root/index", asOf),
+        graft.pipeline.Retrieval.readDocLengths(s, s"$root/index", asOf),
         Seq("the", "of", "data"), k = 20)
     }),
 
@@ -2247,16 +2244,14 @@ object SparkEntry {
         batchId = Some(0L))
       R.appendToPostingsIndexBatch(
         d.where(col("doc_id") % 3 === 1), s"$root/index", 1L)
-      val pin = R.pinPostings(s"$root/index")
+      val pin = graft.pipeline.VersionedStore.pin(s"$root/index", "postings")
       R.appendToPostingsIndexBatch(
         d.where(col("doc_id") % 3 === 2), s"$root/index", 2L)
       R.compactPostingsIndex(s, s"$root/index", keepGenerations = 1)
       val terms = Seq("the", "of", "data")
-      R.bm25TopKFromStorePinned(s, s"$root/index", pin, terms, k = 20)
+      R.bm25TopKFromStore(s, s"$root/index", terms, k = 20, at = pin)
         .withColumn("probe_view", lit("pinned"))
-        .unionByName(R.bm25TopKFromIndex(
-            R.readPostingsIndex(s, s"$root/index"),
-            R.readDocLengths(s, s"$root/index"), terms, k = 20)
+        .unionByName(R.bm25TopKFromStore(s, s"$root/index", terms, k = 20)
           .withColumn("probe_view", lit("head")))
     }),
 
@@ -2319,12 +2314,10 @@ object SparkEntry {
       R.tombstoneDocsDf(d.select("doc_id").where(col("doc_id") % 7 === 2),
         root)
       val terms = Seq("the", "of", "data")
-      R.bm25TopKFromIndex(R.readPostingsIndex(s, root),
-          R.readDocLengths(s, root), terms, k = 20)
+      R.bm25TopKFromStore(s, root, terms, k = 20)
         .withColumn("gen", lit(2L))
-        .unionByName(R.bm25TopKFromIndex(
-            V.readAsOfLive(s, root, "postings", 1L, "doc_id"),
-            V.readAsOfLive(s, root, "doclens", 1L, "doc_id"), terms, k = 20)
+        .unionByName(R.bm25TopKFromStore(s, root, terms, k = 20,
+            at = V.Pin(1L, None))
           .withColumn("gen", lit(1L)))
     }),
 
@@ -3490,7 +3483,7 @@ object SparkEntry {
     }),
 
     // ---- the SECOND serving regime on the same store: shuffle-join
-    // batch annotation (ivfQuantizedTopKFromStoreBatch — no driver
+    // batch annotation (regime = Ann.Shuffle — no driver
     // probe collect, no pushed literal; the path the request-sized
     // regime's graft.ann.maxProbeRows guard names for corpus-sized
     // query batches). Same planted contract, same oracle rows as
@@ -3502,8 +3495,8 @@ object SparkEntry {
       val withTwins = all.unionByName(
         all.select((col("id") + 1000000L).as("id"), col("vec")))
       val store = graft.sources.WireFixtures.annIndexDir(s, dir)
-      Ann.ivfQuantizedTopKFromStoreBatch(all.where(col("id") < 15),
-        withTwins, store, k = 5)
+      Ann.ivfQuantizedTopKFromStore(all.where(col("id") < 15),
+        withTwins, store, k = 5, regime = Ann.Shuffle)
         .where(col("rank") === 1)
     }),
 
@@ -3518,8 +3511,8 @@ object SparkEntry {
       val withTwins = all.unionByName(
         all.select((col("id") + 1000000L).as("id"), col("vec")))
       val store = graft.sources.WireFixtures.annIndexDir(s, dir)
-      Ann.ivfTopKFromStoreBatch(all.where(col("id") < 15), withTwins,
-        store, k = 5)
+      Ann.ivfTopKFromStore(all.where(col("id") < 15), withTwins,
+        store, k = 5, regime = Ann.Shuffle)
         .where(col("rank") === 1)
     }),
 
@@ -3536,8 +3529,8 @@ object SparkEntry {
       val withTwins = all.unionByName(
         all.select((col("id") + 1000000L).as("id"), col("vec")))
       val store = graft.sources.WireFixtures.ivfPqIndexDir(s, dir)
-      Ann.ivfPqTopKFromStoreBatch(all.where(col("id") < 15), withTwins,
-        store, k = 5)
+      Ann.ivfPqTopKFromStore(all.where(col("id") < 15), withTwins,
+        store, k = 5, regime = Ann.Shuffle)
         .where(col("rank") === 1)
     }),
 
@@ -3556,7 +3549,7 @@ object SparkEntry {
       Ann.appendToIndexBatch(
         all.select((col("id") + 1000000L).as("id"), col("vec")),
         s"$root/index", 1L)
-      val pin = Ann.pinIndex(s"$root/index")
+      val pin = graft.pipeline.VersionedStore.pin(s"$root/index", "cells")
       Ann.appendToIndexBatch(
         all.select((col("id") + 500000L).as("id"), col("vec")),
         s"$root/index", 2L)
@@ -3565,14 +3558,14 @@ object SparkEntry {
         .unionByName(all.select((col("id") + 1000000L).as("id"), col("vec")))
         .unionByName(all.select((col("id") + 500000L).as("id"), col("vec")))
       val q = all.where(col("id") < 15)
-      Ann.ivfQuantizedTopKFromStoreBatchPinned(q, corpus, s"$root/index",
-          k = 5, pin, nProbe = 8)
+      Ann.ivfQuantizedTopKFromStore(q, corpus, s"$root/index",
+          k = 5, nProbe = 8, at = pin, regime = Ann.Shuffle)
         .where(col("rank") === 1)
         .select(col("query_id"), col("neighbor_id"),
           lit("pinned").as("probe_view"))
         .unionByName(
-          Ann.ivfQuantizedTopKFromStoreBatch(q, corpus, s"$root/index",
-              k = 5, nProbe = 8)
+          Ann.ivfQuantizedTopKFromStore(q, corpus, s"$root/index",
+              k = 5, nProbe = 8, regime = Ann.Shuffle)
             .where(col("rank") === 1)
             .select(col("query_id"), col("neighbor_id"),
               lit("head").as("probe_view")))
@@ -3596,7 +3589,7 @@ object SparkEntry {
       Ann.appendToIndexBatch(
         all.select((col("id") + 1000000L).as("id"), col("vec")),
         s"$root/index", 1L)
-      val pin = Ann.pinIndex(s"$root/index")
+      val pin = graft.pipeline.VersionedStore.pin(s"$root/index", "cells")
       Ann.appendToIndexBatch(
         all.select((col("id") + 500000L).as("id"), col("vec")),
         s"$root/index", 2L)
@@ -3609,14 +3602,14 @@ object SparkEntry {
         df.where(col("rank") === 1)
           .select(col("query_id"), col("neighbor_id"),
             lit(v).as("probe_view"))
-      view(Ann.ivfTopKFromStorePinned(q, corpus, s"$root/index", k = 5,
-          pin, nProbe = 8), "pinned")
+      view(Ann.ivfTopKFromStore(q, corpus, s"$root/index", k = 5,
+          nProbe = 8, at = pin), "pinned")
         .unionByName(view(Ann.ivfTopKFromStore(q, corpus, s"$root/index",
           k = 5, nProbe = 8), "head"))
-        .unionByName(view(Ann.ivfTopKFromStoreBatchPinned(q, corpus,
-          s"$root/index", k = 5, pin, nProbe = 8), "pinned_batch"))
-        .unionByName(view(Ann.ivfTopKFromStoreBatch(q, corpus,
-          s"$root/index", k = 5, nProbe = 8), "head_batch"))
+        .unionByName(view(Ann.ivfTopKFromStore(q, corpus, s"$root/index",
+          k = 5, nProbe = 8, at = pin, regime = Ann.Shuffle), "pinned_batch"))
+        .unionByName(view(Ann.ivfTopKFromStore(q, corpus, s"$root/index",
+          k = 5, nProbe = 8, regime = Ann.Shuffle), "head_batch"))
     }),
 
     // ---- PIN OBSERVABILITY oracled: listPins is the API answering
@@ -3779,8 +3772,8 @@ object SparkEntry {
         .unionByName(all.select((col("id") + 1000000L).as("id"), col("vec")))
         .unionByName(all.select((col("id") + 500000L).as("id"), col("vec")))
       val q = all.where(col("id") < 15)
-      Ann.ivfQuantizedTopKFromStoreAsOf(q, corpus, s"$root/index", k = 5,
-          maxBatch = 1L, nProbe = 8)
+      Ann.ivfQuantizedTopKFromStore(q, corpus, s"$root/index", k = 5,
+          nProbe = 8, at = graft.pipeline.VersionedStore.AsOf(1L))
         .where(col("rank") === 1)
         .select(col("query_id"), col("neighbor_id"),
           lit("pinned").as("probe_view"))
@@ -3795,7 +3788,7 @@ object SparkEntry {
     // ---- UNIFIED TIME-TRAVEL PIN: as-of has two axes — generation
     // (whole rebuilds) and append batch (within a generation) — and a
     // reader wanting "the store as served at T" must otherwise know
-    // both. Ann.pinIndex captures ONE (gen, maxBatch) token; the pinned
+    // both. VersionedStore.pin captures ONE (gen, maxBatch) token; the pinned
     // server replays it across a later APPEND (batch 2, lower-id twins
     // that would win the cosine tie) AND a later PUBLISH (compaction →
     // fresh generation): pinned serves the +1e6 twin, head the +5e5 —
@@ -3809,7 +3802,7 @@ object SparkEntry {
       Ann.appendToIndexBatch(
         all.select((col("id") + 1000000L).as("id"), col("vec")),
         s"$root/index", 1L)
-      val pin = Ann.pinIndex(s"$root/index")
+      val pin = graft.pipeline.VersionedStore.pin(s"$root/index", "cells")
       // BOTH axes move after the capture: one more append batch, then a
       // compaction that publishes a fresh generation (keepGenerations=1
       // is the retention policy that keeps the pin alive)
@@ -3821,8 +3814,8 @@ object SparkEntry {
         .unionByName(all.select((col("id") + 1000000L).as("id"), col("vec")))
         .unionByName(all.select((col("id") + 500000L).as("id"), col("vec")))
       val q = all.where(col("id") < 15)
-      Ann.ivfQuantizedTopKFromStorePinned(q, corpus, s"$root/index", k = 5,
-          pin, nProbe = 8)
+      Ann.ivfQuantizedTopKFromStore(q, corpus, s"$root/index", k = 5,
+          nProbe = 8, at = pin)
         .where(col("rank") === 1)
         .select(col("query_id"), col("neighbor_id"),
           lit("pinned").as("probe_view"))

@@ -317,30 +317,6 @@ object DbusV2 {
     bytes => f(bytes)
   }
 
-  /** Encode with the full key model: exactly one of keyLong / keyString /
-    * keySchema non-null selects the key kind (DbusEventKey.java:30-35).
-    * A SCHEMA key is carried as an MD5-digest-less CRC32 part (digest
-    * zeroed; the reference hashes the key schema into the digest slot —
-    * the bytes layout is identical). Column order: (seq, tsNs, srcId,
-    * partId, opcode, keyLong, keyString, keySchema, payload). */
-  def encodeMixedUdf(digest: Array[Byte], schemaVersion: Short)
-      : Seq[Column] => Column = {
-    val f = udf { (seq: Long, tsNs: Long, srcId: Int, partId: Int,
-        opcode: String, keyLong: java.lang.Long, keyString: String,
-        keySchema: Array[Byte], payload: Array[Byte]) =>
-      encode(Event(seq, tsNs, srcId, partId.toShort,
-        if (opcode == "DELETE") OpDelete else OpUpsert,
-        keyLong = if (keyString == null && keySchema == null)
-          Some(keyLong.longValue) else None,
-        keyString = Option(keyString).map(_.getBytes("UTF-8")),
-        keyPart = Option(keySchema).map(k =>
-          Part(DigestCrc32, new Array[Byte](4), 1, k)),
-        payload = Option(payload).map(p => Part(DigestMd5, digest,
-          schemaVersion, p))))
-    }
-    cols => f(cols: _*)
-  }
-
   /** Validation error as a nullable string column (null = intact). */
   val errorUdf: Column => Column = {
     val f = udf { (bytes: Array[Byte]) => validate(bytes) }

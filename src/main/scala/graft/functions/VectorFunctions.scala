@@ -43,12 +43,6 @@ object VectorFunctions {
   def l2sq(a: Column, b: Column): Column =
     GraftFunctions.l2sq(a, b)
 
-  /** l2sq via higher-order functions (reference implementation). */
-  def l2sqHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => {
-      val d = x.cast("double") - y.cast("double"); d * d
-    }), lit(0.0), (acc, v) => acc + v)
-
   /** Random-hyperplane signature of a vector: for each seeded pseudo-random
     * hyperplane, the sign bit of the projection — the LSH family for cosine
     * distance (SimHash over embeddings). Hyperplane components are derived

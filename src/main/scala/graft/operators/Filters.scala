@@ -217,15 +217,12 @@ object Filters {
   import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
   private lazy val mapper = new ObjectMapper()
 
-  /** Parse one DbusKeyFilter JSON object:
+  /** One DbusKeyFilter JSON object:
     * `{"partitionType":"RANGE","filters":[{"keyRange":{"start":100,"end":200}}]}`
     * or MOD: `{"partitionType":"MOD","filters":[{"numBuckets":4,"bktRange":{"start":0,"end":2}}]}`.
     * Shape mirrors the Jackson serialization the reference parses
     * (KeyFilterConfigJSONFactory.getDbusKeyFilter; test fixtures in
     * TestDbusKeyCompositeFilter.java:162). */
-  def parseKeyFilter(json: String): DbusKeyFilter =
-    parseKeyFilterNode(mapper.readTree(json))
-
   private def parseKeyFilterNode(node: JsonNode): DbusKeyFilter = {
     val ptype = node.get("partitionType").asText()
     val subs = Option(node.get("filters")).toSeq.flatMap { arr =>

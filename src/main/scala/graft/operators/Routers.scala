@@ -35,7 +35,4 @@ object Routers {
   /** Route a frame to n physical partitions by key (hash router). */
   def routeByKey(df: DataFrame, key: Column, numPartitions: Int): DataFrame =
     df.repartition(numPartitions, hashPartition(key, numPartitions))
-
-  /** Route everything to one constant partition (const router). */
-  def routeConstant(df: DataFrame): DataFrame = df.repartition(1)
 }

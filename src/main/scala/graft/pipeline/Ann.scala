@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
+import VersionedStore.{Head, StoreAt}
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -84,20 +85,7 @@ object Ann {
       .join(broadcast(bucketed(queries, "query_id")), Seq("table", "bucket"))
       .where(col("neighbor_id") =!= col("query_id"))
       .select("query_id", "neighbor_id").distinct()
-    val withVecs = cand
-      .join(corpus.select(col("id").as("neighbor_id"), col("vec").as("cvec")),
-        "neighbor_id")
-      .join(broadcast(queries.select(col("id").as("query_id"),
-        col("vec").as("qvec"))), "query_id")
-      .select(col("query_id"), col("neighbor_id"),
-        cosine(col("qvec"), col("cvec")).as("cosine"))
-    val scored = withVecs
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        round(col("cosine"), 6).as("cosine"))
+    exactTopK(cand, queries, corpus, k, Request)
   }
 
   /** Quantized-scan ANN: the corpus is scanned in int8 (4× fewer bytes —
@@ -125,19 +113,8 @@ object Ann {
         .cast("array<float>").as("vec")),
       k = rerank)
     // exact float re-rank of the surviving candidates only
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    approx.select("query_id", "neighbor_id")
-      .join(corpus.select(col("id").as("neighbor_id"), col("vec").as("cvec")),
-        "neighbor_id")
-      .join(broadcast(queries.select(col("id").as("query_id"),
-        col("vec").as("qvec"))), "query_id")
-      .select(col("query_id"), col("neighbor_id"),
-        cosine(col("qvec"), col("cvec")).as("cosine"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        round(col("cosine"), 6).as("cosine"))
+    exactTopK(approx.select("query_id", "neighbor_id"), queries, corpus, k,
+      Request)
   }
 
   /** IVF probing combined with the quantized scan (the IVF-PQ-lite
@@ -164,7 +141,8 @@ object Ann {
     require(centRows.nonEmpty, "ivfQuantizedTopK: empty centroid set")
     ivfQuantizedCore(queries, quantizedCells(corpus, centRows)
         .withColumnRenamed("id", "neighbor_id"),
-      centroids, corpus, k, nProbe, rerank)
+      centroids, corpus, k, nProbe, rerank, Request,
+      "Ann.ivfQuantizedTopKFromStore")
   }
 
   /** Cell assignment + int8 storage tier in ONE corpus projection:
@@ -180,15 +158,6 @@ object Ann {
       .select("id", "cell_id", "q", "scale")
   }
 
-  /** Shared IVF+int8 retrieval over an already-assigned cell table
-    * ((cell_id, neighbor_id, q, scale) — computed inline by
-    * [[ivfQuantizedTopK]], read from a store by
-    * [[ivfQuantizedTopKFromStore]]); `corpus` supplies float vectors for
-    * the exact re-rank of survivors only. */
-  /** Query-side cell probing shared by every IVF path: each query ranks
-    * all centroids by l2 and keeps its `nProbe` nearest cells — a tiny
-    * broadcast crossJoin + per-query window (queries × cells rows).
-    * Output: (query_id, qvec, cell_id, dist, r). */
   /** Collected (id, vec) rows of a codebook frame, memoized per plan —
     * a serving process probes the same store's codebook on every
     * request, and the generation directory rides the plan key
@@ -228,6 +197,9 @@ object Ann {
   }
   PlanCache.onClear(() => clearQuantizerMemos())
 
+  /** Query-side cell probing shared by every IVF path: each query keeps
+    * its `nProbe` nearest cells by l2. Output: (query_id, qvec, cell_id,
+    * dist, cent). */
   private def probeCells(queries: DataFrame, centroids: DataFrame,
       nProbe: Int): DataFrame = {
     // codebooks are driver-collectable by construction — one k-row
@@ -277,16 +249,14 @@ object Ann {
     * collect assumes is checked, not trusted — the collect itself is
     * bounded at [[maxProbeRows]]+1 rows (`limit`, so an over-budget
     * probe frame can never OOM the driver first), and crossing the
-    * budget raises a loud two-regime error naming `batchRegime` — the
-    * CALLING FAMILY'S OWN corpus-sized-batch path (each quantizer tier
-    * has one: [[ivfQuantizedTopKFromStoreBatch]],
-    * [[ivfTopKFromStoreBatch]], [[ivfPqTopKFromStoreBatch]]) — so a
+    * budget raises a loud two-regime error naming the [[Shuffle]]
+    * regime of `who` — the CALLING FAMILY'S OWN serve def, so a
     * PQ-family caller is never sent to a function that reads a
     * different store family's tables.
     * Reference analogue: every /stream request carries an enforced
     * response budget (ReadEventsRequestProcessor.java:78-79) — serving
     * entry points never let one oversized request take the server down. */
-  private def materializeProbes(probes: DataFrame, batchRegime: String,
+  private def materializeProbes(probes: DataFrame, who: String,
       cols: String*): (Seq[Long], DataFrame) = {
     val spark = probes.sparkSession
     val cap = maxProbeRows(spark)
@@ -297,7 +267,7 @@ object Ann {
         " nProbe) — the store-served top-k paths materialize probes on" +
         " the driver and are for request-sized query batches; for a" +
         " corpus-sized batch (annotating a lake against the index) use" +
-        s" this family's shuffle regime, $batchRegime, which" +
+        s" the shuffle regime of $who (regime = Ann.Shuffle), which" +
         " joins the coded tier to the probe frame on cell_id and never" +
         " collects (or raise the cap if the driver really has the heap)")
     val ids = rows.map(_.getAs[Long]("cell_id")).distinct.sorted.toSeq
@@ -310,7 +280,7 @@ object Ann {
     * (queries × nProbe rows cross [[materializeProbes]]'s collect).
     * Runtime-settable Spark conf, same idiom as
     * `graft.store.reservationLeaseMs`. The 1M default is ~tens of MB of
-    * (long, long[, lut]) rows — comfortable on any driver that runs
+    * (long, long[, qvec | lut]) rows — comfortable on any driver that runs
     * Spark at all, far above any interactive request, far below a
     * corpus-sized annotation batch. */
   val ProbeCapConf = "graft.ann.maxProbeRows"
@@ -338,12 +308,81 @@ object Ann {
     math.min(v, Int.MaxValue - 1L).toInt
   }
 
+  /** How an IVF-family store serve meets the probe frame (queries ×
+    * nProbe rows) with the stored coded tier:
+    *
+    *   - [[Request]] (default) — request-sized query batches: the probe
+    *     frame is collected once on the driver ([[materializeProbes]],
+    *     budgeted by `graft.ann.maxProbeRows`), its cell ids become a
+    *     pushed `In(cell_id)` literal that skips unprobed row groups,
+    *     and the query side rides broadcasts;
+    *   - [[Shuffle]] — corpus-sized query batches (annotating a lake
+    *     against the index): the probe frame is never collected, never
+    *     broadcast and never a literal; candidates come from a plain
+    *     hash join on cell_id and every later join is unhinted so AQE
+    *     sizes it from measurements. The stated trade: without the
+    *     literal the coded tier SCANS — correct economics when the batch
+    *     probes most cells anyway, which a corpus-sized batch does.
+    *
+    * Both answer identically (same probe ranking, scoring, rerank and
+    * tie-break rules — AnnBatchStoreSpec). An explicit argument, never
+    * auto-selected: choosing per call would cost a job per request or
+    * a plan-statistics guess. Reference analogue: the relay path (a
+    * seek, ScnIndex) vs the bootstrap path (a full scan,
+    * BootstrapSrcDBEventReader.java) over the same data. */
+  sealed trait Regime
+  case object Request extends Regime
+  case object Shuffle extends Regime
+
+  /** The probe join — the one step where the two [[Regime]]s differ:
+    * stored `cells` rows meet the probe frame's `cols` (cell_id among
+    * them) on cell_id. `who` names the serve def in the over-budget
+    * error. */
+  private def probeJoin(cells: DataFrame, probes: DataFrame,
+      regime: Regime, who: String, cols: String*): DataFrame =
+    regime match {
+      case Request =>
+        // literal probed-cell pushdown: the store scan skips unprobed
+        // row groups instead of filtering in the join
+        val (probedIds, probesL) = materializeProbes(probes, who, cols: _*)
+        cells.where(col("cell_id").isin(probedIds: _*))
+          .join(broadcast(probesL), "cell_id")
+      case Shuffle =>
+        cells.join(probes.select(cols.head, cols.tail: _*), "cell_id")
+    }
+
+  /** Exact float re-rank of (query_id, neighbor_id) candidates into the
+    * serving shape (query_id, neighbor_id, rank, cosine): only these
+    * rows fetch float vectors from `corpus` (an id-keyed join into the
+    * lake). The query side is broadcast under [[Request]] (request-sized
+    * by contract) and left to AQE under [[Shuffle]]. */
+  private def exactTopK(pairs: DataFrame, queries: DataFrame,
+      corpus: DataFrame, k: Int, regime: Regime): DataFrame = {
+    val qv = queries.select(col("id").as("query_id"), col("vec").as("qvec"))
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("cosine").desc, col("neighbor_id"))
+    pairs
+      .join(corpus.select(col("id").as("neighbor_id"), col("vec").as("cvec")),
+        "neighbor_id")
+      .join(if (regime == Request) broadcast(qv) else qv, "query_id")
+      .withColumn("cosine", cosine(col("qvec"), col("cvec")))
+      .withColumn("rank", row_number().over(w))
+      .where(col("rank") <= k)
+      .select(col("query_id"), col("neighbor_id"), col("rank"),
+        round(col("cosine"), 6).as("cosine"))
+  }
+
+  /** IVF+int8 retrieval over an already-assigned cell table
+    * ((cell_id, neighbor_id, q, scale) — computed inline by
+    * [[ivfQuantizedTopK]], read from a store by
+    * [[ivfQuantizedTopKFromStore]]); `corpus` supplies float vectors for
+    * the exact re-rank of survivors only. */
   private def ivfQuantizedCore(queries: DataFrame, cells: DataFrame,
       centroids: DataFrame, corpus: DataFrame, k: Int, nProbe: Int,
-      rerank: Int): DataFrame = {
+      rerank: Int, regime: Regime, who: String): DataFrame = {
     import graft.functions.VectorFunctions.dequantizeInt8
-    val probes = probeCells(queries, centroids, nProbe)
-    // approximate scoring over the probed cells' int8 members. The
+    // approximate scoring over the probed cells' int8 members; qvec
+    // rides the probe rows, so scoring needs no second query join. The
     // rerank CUT breaks approx ties to the LARGEST neighbor_id kept —
     // same rule as pqTopK's heap eviction: when more than `rerank`
     // candidates quantize to identical codes (duplicate-heavy corpora)
@@ -351,34 +390,16 @@ object Ann {
     // re-rank; an ascending tie-break would cut it first
     val wApprox = Window.partitionBy(col("query_id"))
       .orderBy(col("approx").desc, col("neighbor_id").desc)
-    val (probedIds, probesL) =
-      materializeProbes(probes, "ivfQuantizedTopKFromStoreBatch",
-        "cell_id", "query_id")
-    val survivors = cells.where(col("cell_id").isin(probedIds: _*))
-      .join(broadcast(probesL), "cell_id")
+    val survivors = probeJoin(cells, probeCells(queries, centroids, nProbe),
+        regime, who, "cell_id", "query_id", "qvec")
       .where(col("neighbor_id") =!= col("query_id"))
       .dropDuplicates("query_id", "neighbor_id")
-      .join(broadcast(queries.select(col("id").as("query_id"),
-        col("vec").as("qvec"))), "query_id")
       .withColumn("approx", cosine(col("qvec"),
         dequantizeInt8(col("q"), col("scale")).cast("array<float>")))
       .withColumn("ar", row_number().over(wApprox))
       .where(col("ar") <= rerank)
       .select("query_id", "neighbor_id")
-    // exact float re-rank of the survivors only
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    survivors
-      .join(corpus.select(col("id").as("neighbor_id"), col("vec").as("cvec")),
-        "neighbor_id")
-      .join(broadcast(queries.select(col("id").as("query_id"),
-        col("vec").as("qvec"))), "query_id")
-      .select(col("query_id"), col("neighbor_id"),
-        cosine(col("qvec"), col("cvec")).as("cosine"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        round(col("cosine"), 6).as("cosine"))
+    exactTopK(survivors, queries, corpus, k, regime)
   }
 
   /** Write a PERSISTED IVF index for `corpus` into `dir`:
@@ -544,299 +565,38 @@ object Ann {
     * re-training — the r6 gap where every new session re-trained the
     * memoized codebook), approximate scoring reads the stored int8 tier,
     * and only `queries × rerank` survivors fetch float vectors from
-    * `corpus` (an id-keyed join into the lake). */
+    * `corpus` (an id-keyed join into the lake).
+    *
+    * `at` bounds the read ([[VersionedStore.StoreAt]]): codebook and
+    * cells resolve ONCE from one table root, so a pinned serve never
+    * scores its cells under another generation's codebook; the codebook
+    * is frozen across appends, so an [[VersionedStore.AsOf]] state is
+    * exactly what the store served when that batch was its head.
+    * `regime` picks the request or corpus-sized serving plan
+    * ([[Regime]]). */
   def ivfQuantizedTopKFromStore(queries: DataFrame, corpus: DataFrame,
-      storeDir: String, k: Int, nProbe: Int = 2, rerank: Int = 50): DataFrame = {
+      storeDir: String, k: Int, nProbe: Int = 2, rerank: Int = 50,
+      at: StoreAt = Head, regime: Regime = Request): DataFrame = {
     val spark = corpus.sparkSession
-    val centroids =
-      spark.read.parquet(s"${VersionedStore.tableRoot(storeDir)}/codebook")
-    val cells = readCells(spark, storeDir)
-      .withColumnRenamed("id", "neighbor_id")
-    ivfQuantizedCore(queries, cells, centroids, corpus, k, nProbe, rerank)
+    val who = "Ann.ivfQuantizedTopKFromStore"
+    val r = VersionedStore.resolve(storeDir, at, who)
+    ivfQuantizedCore(queries,
+      r.live(spark, "cells", "id").withColumnRenamed("id", "neighbor_id"),
+      r.table(spark, "codebook"), corpus, k, nProbe, rerank, regime, who)
   }
 
-  /** SHUFFLE-regime [[ivfQuantizedTopKFromStore]] for CORPUS-SIZED query
-    * batches — the second serving regime the request-sized path's budget
-    * guard ([[materializeProbes]], `graft.ann.maxProbeRows`) points at.
-    * Identical answers (same probe ranking, same approx scoring, same
-    * rerank/tie-break rules, verified pairwise in AnnBatchStoreSpec);
-    * different plan: the probe frame (queries × nProbe rows, here
-    * potentially billions) is never collected, never broadcast, and
-    * never becomes a pushable literal — candidates come from a plain
-    * hash join of the stored coded tier to the probe frame on cell_id,
-    * and every later join (exact-rerank vector fetches included) is
-    * unhinted so AQE sizes them from measurements. The trade is stated,
-    * not hidden: without the probed-cell literal the coded tier SCANS
-    * (row-group skipping needs a literal predicate) — correct economics
-    * when the probe set covers most cells anyway, which a corpus-sized
-    * batch does by construction (a lake-annotation job probes every cell
-    * many times over; pruning has nothing left to skip). Use the
-    * request-sized path for serving, this for batch annotation.
-    * Reference analogue: the bootstrap path vs the relay path — the
-    * same data served by a seek (ScnIndex) for tailing requests and by
-    * a full scan for whole-corpus consumers
-    * (BootstrapSrcDBEventReader.java). */
-  def ivfQuantizedTopKFromStoreBatch(queries: DataFrame, corpus: DataFrame,
-      storeDir: String, k: Int, nProbe: Int = 2,
-      rerank: Int = 50): DataFrame = {
-    val spark = corpus.sparkSession
-    ivfQuantizedBatchCore(queries, corpus,
-      spark.read.parquet(s"${VersionedStore.tableRoot(storeDir)}/codebook"),
-      readCells(spark, storeDir).withColumnRenamed("id", "neighbor_id"),
-      k, nProbe, rerank)
-  }
-
-  /** [[ivfQuantizedTopKFromStoreBatch]] at a captured [[AnnPin]] — the
-    * COMPOSITION of the two serving contracts: a lake-annotation job is
-    * exactly the long-running training-shaped consumer the pin exists
-    * for, so the shuffle regime must resolve the pinned generation's
-    * codebook and cells (batches past the pin partition-pruned,
-    * tombstones still applied) the same way the request-regime pinned
-    * server does — otherwise "annotate the whole lake against a frozen
-    * index" silently reads the head mid-job. */
-  def ivfQuantizedTopKFromStoreBatchPinned(queries: DataFrame,
-      corpus: DataFrame, storeDir: String, k: Int, pin: AnnPin,
-      nProbe: Int = 2, rerank: Int = 50): DataFrame = {
-    val spark = corpus.sparkSession
-    val t = VersionedStore.pinnedGenerationRoot(storeDir, pin.gen,
-      pin.maxBatch, "Ann.ivfQuantizedTopKFromStoreBatchPinned")
-    ivfQuantizedBatchCore(queries, corpus,
-      spark.read.parquet(s"$t/codebook"),
-      liveRowsAt(spark, t, "cells", pin.maxBatch)
-        .withColumnRenamed("id", "neighbor_id"),
-      k, nProbe, rerank)
-  }
-
-  private def ivfQuantizedBatchCore(queries: DataFrame, corpus: DataFrame,
-      centroids: DataFrame, cells: DataFrame, k: Int, nProbe: Int,
-      rerank: Int): DataFrame = {
-    import graft.functions.VectorFunctions.dequantizeInt8
-    // probe ranking is probeCells verbatim — the centroid crossJoin
-    // broadcast is codebook-sized and regime-independent; qvec rides the
-    // probe rows so approx scoring needs no second corpus-sized join
-    val probes = probeCells(queries, centroids, nProbe)
-      .select(col("cell_id"), col("query_id"), col("qvec"))
-    val wApprox = Window.partitionBy(col("query_id"))
-      .orderBy(col("approx").desc, col("neighbor_id").desc)
-    val survivors = cells
-      .join(probes, "cell_id")
-      .where(col("neighbor_id") =!= col("query_id"))
-      .dropDuplicates("query_id", "neighbor_id")
-      .withColumn("approx", cosine(col("qvec"),
-        dequantizeInt8(col("q"), col("scale")).cast("array<float>")))
-      .withColumn("ar", row_number().over(wApprox))
-      .where(col("ar") <= rerank)
-      .select("query_id", "neighbor_id")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    survivors
-      .join(corpus.select(col("id").as("neighbor_id"), col("vec").as("cvec")),
-        "neighbor_id")
-      .join(queries.select(col("id").as("query_id"), col("vec").as("qvec")),
-        "query_id")
-      .select(col("query_id"), col("neighbor_id"),
-        cosine(col("qvec"), col("cvec")).as("cosine"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        round(col("cosine"), 6).as("cosine"))
-  }
-
-  /** SHUFFLE-regime [[ivfTopKFromStore]] — batch-serving PARITY for the
-    * float-precision IVF family (the scan path exists for every family
-    * the seek path serves, the reference's bootstrap rule:
-    * BootstrapProcessor.java:122-160 iterates ALL sources). Identical
-    * answers to the request regime (same probe ranking, same exact
-    * scoring, same tie-breaks); same stated trade as
-    * [[ivfQuantizedTopKFromStoreBatch]]: no probed-cell literal, so the
-    * assignment tier scans — correct economics when a corpus-sized
-    * batch probes every cell anyway. */
-  def ivfTopKFromStoreBatch(queries: DataFrame, corpus: DataFrame,
-      storeDir: String, k: Int, nProbe: Int = 2): DataFrame = {
-    val spark = corpus.sparkSession
-    val centroids =
-      spark.read.parquet(s"${VersionedStore.tableRoot(storeDir)}/codebook")
-    val cells = readCells(spark, storeDir)
-      .select(col("id").as("neighbor_id"), col("cell_id"))
-    ivfBatchCore(queries, corpus, centroids, cells, k, nProbe)
-  }
-
-  /** [[ivfTopKFromStoreBatch]] at a captured [[AnnPin]] — the last cell
-    * of the serving matrix: 3 quantizer families × {request, batch} ×
-    * {head, pinned}. A lake-annotation job that reranks on the
-    * float-precision tier pins it exactly like the coded tiers
-    * ([[ivfQuantizedTopKFromStoreBatchPinned]]'s rationale); codebook
-    * and cells resolve from the pinned generation, cells additionally
-    * pinned at the recorded append batch, tombstones still apply. */
-  def ivfTopKFromStoreBatchPinned(queries: DataFrame, corpus: DataFrame,
-      storeDir: String, k: Int, pin: AnnPin, nProbe: Int = 2): DataFrame = {
-    val spark = corpus.sparkSession
-    val t = VersionedStore.pinnedGenerationRoot(storeDir, pin.gen,
-      pin.maxBatch, "Ann.ivfTopKFromStoreBatchPinned")
-    val centroids = spark.read.parquet(s"$t/codebook")
-    val cells = liveRowsAt(spark, t, "cells", pin.maxBatch)
-      .select(col("id").as("neighbor_id"), col("cell_id"))
-    ivfBatchCore(queries, corpus, centroids, cells, k, nProbe)
-  }
-
-  /** Shuffle-regime float-precision serve against an already-resolved
-    * (centroids, cells) pair — shared by the head and pinned batch
-    * readers, the same one-core discipline as [[ivfExactCore]] /
-    * [[ivfQuantizedBatchCore]] / [[ivfPqBatchCore]]. */
-  private def ivfBatchCore(queries: DataFrame, corpus: DataFrame,
-      centroids: DataFrame, cells: DataFrame, k: Int,
-      nProbe: Int): DataFrame = {
-    val probes = probeCells(queries, centroids, nProbe)
-      .select(col("cell_id"), col("query_id"), col("qvec"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    cells
-      .join(probes, "cell_id")
-      .where(col("neighbor_id") =!= col("query_id"))
-      .dropDuplicates("query_id", "neighbor_id")
-      .join(corpus.select(col("id").as("neighbor_id"), col("vec").as("cvec")),
-        "neighbor_id")
-      .withColumn("cosine", cosine(col("qvec"), col("cvec")))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        round(col("cosine"), 6).as("cosine"))
-  }
-
-  /** The LIVE cell assignments of a [[writeIndex]] store: stored rows
-    * minus any [[tombstoneVectors]] takedowns — candidate generation is
-    * the only place a vector exists in the serving path, so the
-    * anti-join here removes it from every retrieval at once. No
-    * takedowns, no plan overhead. On a batch-addressed store
-    * ([[appendToIndexBatch]]) the discovered `batch` partition column
-    * is LAYOUT, not data — dropped here so every consumer (serving,
-    * fsck, maintenance rewrites) sees one schema either way. */
+  /** The LIVE cell assignments of a [[writeIndex]] store at `at`: stored
+    * rows minus any [[tombstoneVectors]] takedowns — candidate
+    * generation is the only place a vector exists in the serving path,
+    * so the anti-join here removes it from every retrieval at once. On
+    * a batch-addressed store ([[appendToIndexBatch]]) the `batch`
+    * partition column is LAYOUT, not data — dropped so every consumer
+    * (serving, fsck, maintenance rewrites) sees one schema either way;
+    * an [[VersionedStore.AsOf]] bound prunes the later batches. */
   def readCells(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String): DataFrame = {
-    val t = VersionedStore.tableRoot(storeDir)
-    Tombstones.filterLive(
-      spark.read.parquet(s"$t/cells").drop("batch"), t, "id")
-  }
-
-  /** [[readCells]] PINNED at append batch `maxBatch` — snapshot
-    * reproducibility for a batch-addressed store
-    * ([[appendToIndexBatch]], whose `batch=` partition column IS the
-    * append history): only batches ≤ `maxBatch` scan (partition
-    * pruning — later batches' files never enter the plan), so a
-    * training run can pin the exact index state it retrieved against
-    * and replay it after any number of later appends —
-    * [[Retrieval.readPostingsIndexAsOf]]'s contract on the ANN store.
-    * Same deliberate asymmetry: TOMBSTONES STILL APPLY — a takedown is
-    * legal erasure, and a time-travel read that resurrected deleted
-    * vectors would defeat it, so as-of pins the append history, never
-    * the delete history. The PQ-family tables pin identically (their
-    * `batch` column is the same layout); the IVF reader carries the
-    * serving variant ([[ivfQuantizedTopKFromStoreAsOf]]) as the
-    * representative. */
-  def readCellsAsOf(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String, maxBatch: Long): DataFrame = {
-    val t = VersionedStore.tableRoot(storeDir)
-    val raw = spark.read.parquet(s"$t/cells")
-    require(raw.columns.contains("batch"),
-      s"readCellsAsOf: $storeDir is not batch-addressed — only" +
-        " appendToIndexBatch stores carry a pinnable append history")
-    Tombstones.filterLive(
-      raw.where(col("batch") <= maxBatch).drop("batch"), t, "id")
-  }
-
-  /** [[ivfQuantizedTopKFromStore]] against the [[readCellsAsOf]] pin:
-    * candidates come only from batches ≤ `maxBatch` (the codebook is
-    * frozen across appends, so the pinned state is exactly what the
-    * store served when batch `maxBatch` was its head). */
-  def ivfQuantizedTopKFromStoreAsOf(queries: DataFrame, corpus: DataFrame,
-      storeDir: String, k: Int, maxBatch: Long, nProbe: Int = 2,
-      rerank: Int = 50): DataFrame = {
-    val spark = corpus.sparkSession
-    val centroids =
-      spark.read.parquet(s"${VersionedStore.tableRoot(storeDir)}/codebook")
-    val cells = readCellsAsOf(spark, storeDir, maxBatch)
-      .withColumnRenamed("id", "neighbor_id")
-    ivfQuantizedCore(queries, cells, centroids, corpus, k, nProbe, rerank)
-  }
-
-  /** ONE time-travel coordinate for an ANN store — the unified pin the
-    * two as-of axes compose into: `gen` is the [[VersionedStore]]
-    * generation (whole rebuilds/compactions), `maxBatch` the append
-    * batch WITHIN it (`None` on a store without the batch-addressed
-    * layout). A training job captures this at read time ([[pinIndex]])
-    * and records a single token; replaying through the `*FromStorePinned`
-    * servers then reproduces the exact store state it retrieved against
-    * — across any number of later appends AND later publishes — without
-    * knowing which axis moved. Tombstones deliberately still apply
-    * (takedowns fan into every retained generation's overlay): a pin
-    * reproduces the append history, never resurrects erasure. The pin
-    * dies when [[VersionedStore.gc]] retires its generation — retention
-    * is the caller's policy, and a dead pin fails LOUDLY
-    * ([[VersionedStore.pinnedGenerationRoot]]), never serves a substitute. */
-  final case class AnnPin(gen: Long, maxBatch: Option[Long])
-
-  /** Capture the CURRENT pin of a versioned ANN-family store (IVF, PQ,
-    * or IVF-PQ — the coded table is `cells/` or `codes/`): the flipped
-    * generation plus the highest append batch inside it. Metadata-only:
-    * one pointer resolution + one directory listing (the `batch=<id>`
-    * partition dirs), never a table scan. */
-  def pinIndex(storeDir: String): AnnPin = {
-    val gen = VersionedStore.currentGen(storeDir).getOrElse(
-      throw new IllegalStateException(s"Ann.pinIndex: $storeDir has no" +
-        " published generation — only versioned stores carry a pinnable" +
-        " coordinate"))
-    val t = VersionedStore.generationRoot(storeDir, gen)
-    val table = if (StoreFs.listDirNames(t).contains("cells")) "cells"
-      else "codes"
-    AnnPin(gen, VersionedStore.batchIdsOf(s"$t/$table").maxOption)
-  }
-
-  /** [[VersionedStore.liveRowsAt]] on the ANN id column — the one read
-    * every pinned server here shares. */
-  private def liveRowsAt(spark: org.apache.spark.sql.SparkSession,
-      genRoot: String, table: String, maxBatch: Option[Long]): DataFrame =
-    VersionedStore.liveRowsAt(spark, genRoot, table, maxBatch, "id")
-
-  /** [[ivfQuantizedTopKFromStore]] at a captured [[AnnPin]]: codebook
-    * AND cells resolve from the pinned generation (not the head), cells
-    * additionally pin at the recorded append batch. */
-  def ivfQuantizedTopKFromStorePinned(queries: DataFrame, corpus: DataFrame,
-      storeDir: String, k: Int, pin: AnnPin, nProbe: Int = 2,
-      rerank: Int = 50): DataFrame = {
-    val spark = corpus.sparkSession
-    val t = VersionedStore.pinnedGenerationRoot(storeDir, pin.gen,
-      pin.maxBatch, "Ann.ivfQuantizedTopKFromStorePinned")
-    val centroids = spark.read.parquet(s"$t/codebook")
-    val cells = liveRowsAt(spark, t, "cells", pin.maxBatch)
-      .withColumnRenamed("id", "neighbor_id")
-    ivfQuantizedCore(queries, cells, centroids, corpus, k, nProbe, rerank)
-  }
-
-  /** [[pqTopKFromStore]] at a captured [[AnnPin]] — the books load from
-    * the pinned generation too (a later retrain publishes new books; a
-    * pin must never score old codes under them). */
-  def pqTopKFromStorePinned(queries: DataFrame, corpus: DataFrame,
-      storeDir: String, k: Int, pin: AnnPin, rerank: Int = 50): DataFrame = {
-    val spark = corpus.sparkSession
-    val t = VersionedStore.pinnedGenerationRoot(storeDir, pin.gen,
-      pin.maxBatch, "Ann.pqTopKFromStorePinned")
-    val books = readPqBooksAt(spark, t)
-    val codes = liveRowsAt(spark, t, "codes", pin.maxBatch)
-      .select(col("id").as("neighbor_id"), col("codes"))
-    pqCore(queries, codes, books, corpus, k, rerank)
-  }
-
-  /** [[ivfPqTopKFromStore]] at a captured [[AnnPin]] — all three tables
-    * (codebook, books, cells) resolve from the pinned generation. */
-  def ivfPqTopKFromStorePinned(queries: DataFrame, corpus: DataFrame,
-      storeDir: String, k: Int, pin: AnnPin, nProbe: Int = 2,
-      rerank: Int = 50): DataFrame = {
-    val spark = corpus.sparkSession
-    val t = VersionedStore.pinnedGenerationRoot(storeDir, pin.gen,
-      pin.maxBatch, "Ann.ivfPqTopKFromStorePinned")
-    ivfPqServeAt(queries, corpus, t,
-      liveRowsAt(spark, t, "cells", pin.maxBatch), k, nProbe, rerank)
-  }
+      storeDir: String, at: StoreAt = Head): DataFrame =
+    VersionedStore.resolve(storeDir, at, "Ann.readCells")
+      .live(spark, "cells", "id")
 
   /** Mean recall@k of an approximate top-k frame against the exact one
     * (both in the (query_id, neighbor_id, rank, cosine) serving shape,
@@ -896,7 +656,7 @@ object Ann {
     // a batch-addressed store keeps its FULL batch=<id> layout through
     // the rewrite (a row's batch identity is preserved, not rolled up):
     // compaction drops tombstoned rows only, so the as-of pin
-    // ([[readCellsAsOf]]) stays exact across the GC — a rollup would
+    // (an AsOf or Pin bound) stays exact across the GC — a rollup would
     // silently pull later batches under every earlier pin — and
     // post-compaction [[appendToIndexBatch]] writes keep working
     val liveCells = shapeByCell(Tombstones.filterLive(
@@ -1163,62 +923,23 @@ object Ann {
   /** Float-precision IVF retrieval against a [[writeIndex]] store: the
     * stored (id, cell_id) assignment bounds candidates per probed cell;
     * candidate ids join `corpus` for vectors (id-keyed, linear) — the
-    * int8 tier is bypassed, so scoring is exact without a re-rank pass. */
+    * int8 tier is bypassed, so scoring is exact without a re-rank pass.
+    * This is the tier a training job RERANKS against, so it takes the
+    * same `at` bound and `regime` as [[ivfQuantizedTopKFromStore]]. */
   def ivfTopKFromStore(queries: DataFrame, corpus: DataFrame,
-      storeDir: String, k: Int, nProbe: Int = 2): DataFrame = {
+      storeDir: String, k: Int, nProbe: Int = 2, at: StoreAt = Head,
+      regime: Regime = Request): DataFrame = {
     val spark = corpus.sparkSession
-    val centroids =
-      spark.read.parquet(s"${VersionedStore.tableRoot(storeDir)}/codebook")
-    val cells = readCells(spark, storeDir)
+    val who = "Ann.ivfTopKFromStore"
+    val r = VersionedStore.resolve(storeDir, at, who)
+    val cells = r.live(spark, "cells", "id")
       .select(col("id").as("neighbor_id"), col("cell_id"))
-    ivfExactCore(queries, corpus, centroids, cells, k, nProbe)
-  }
-
-  /** [[ivfTopKFromStore]] at a captured [[AnnPin]] — pin parity for the
-    * float-precision family: this is the tier a training job RERANKS
-    * against, so a job that pins its quantized retrieval but reranks on
-    * raw IVF must not see the head move mid-epoch. Codebook and cells
-    * resolve from the pinned generation, cells additionally pinned at
-    * the recorded append batch; tombstones still apply
-    * ([[ivfQuantizedTopKFromStorePinned]]'s contract). */
-  def ivfTopKFromStorePinned(queries: DataFrame, corpus: DataFrame,
-      storeDir: String, k: Int, pin: AnnPin, nProbe: Int = 2): DataFrame = {
-    val spark = corpus.sparkSession
-    val t = VersionedStore.pinnedGenerationRoot(storeDir, pin.gen,
-      pin.maxBatch, "Ann.ivfTopKFromStorePinned")
-    val centroids = spark.read.parquet(s"$t/codebook")
-    val cells = liveRowsAt(spark, t, "cells", pin.maxBatch)
-      .select(col("id").as("neighbor_id"), col("cell_id"))
-    ivfExactCore(queries, corpus, centroids, cells, k, nProbe)
-  }
-
-  /** Request-regime float-precision serve against an already-resolved
-    * (centroids, cells) pair — shared by the head and pinned readers so
-    * the two can never drift in probe ranking, pushdown, or tie-breaks. */
-  private def ivfExactCore(queries: DataFrame, corpus: DataFrame,
-      centroids: DataFrame, cells: DataFrame, k: Int,
-      nProbe: Int): DataFrame = {
-    val probes = probeCells(queries, centroids, nProbe)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    // literal probed-cell pushdown ([[materializeProbes]]): the store
-    // scan skips unprobed row groups instead of filtering in the join
-    val (probedIds, probesL) =
-      materializeProbes(probes, "ivfTopKFromStoreBatch",
-        "cell_id", "query_id")
-    cells.where(col("cell_id").isin(probedIds: _*))
-      .join(broadcast(probesL), "cell_id")
+    val pairs = probeJoin(cells,
+        probeCells(queries, r.table(spark, "codebook"), nProbe),
+        regime, who, "cell_id", "query_id")
       .where(col("neighbor_id") =!= col("query_id"))
       .dropDuplicates("query_id", "neighbor_id")
-      .join(corpus.select(col("id").as("neighbor_id"), col("vec").as("cvec")),
-        "neighbor_id")
-      .join(broadcast(queries.select(col("id").as("query_id"),
-        col("vec").as("qvec"))), "query_id")
-      .withColumn("cosine", cosine(col("qvec"), col("cvec")))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        round(col("cosine"), 6).as("cosine"))
+    exactTopK(pairs, queries, corpus, k, regime)
   }
 
   /** Train product-quantization sub-codebooks: the vector space splits
@@ -1470,8 +1191,8 @@ object Ann {
     readPqBooksAt(spark, VersionedStore.tableRoot(storeDir))
 
   /** [[readPqBooks]] against an ALREADY-RESOLVED table root (current
-    * generation, a pinned one, or a flat dir) — the pinned servers must
-    * load the books of the generation they serve, never the head's. */
+    * generation, a pinned one, or a flat dir) — a serve must load the
+    * books of the generation it serves, never the head's. */
   private val pqBooksMemo = new java.util.concurrent.ConcurrentHashMap[
     String, Array[Array[(Long, Seq[Float])]]]()
   private def readPqBooksAt(spark: org.apache.spark.sql.SparkSession,
@@ -1521,16 +1242,13 @@ object Ann {
     books
   }
 
-  /** The LIVE code words of a [[writePqIndex]] store (tombstone-aware —
-    * candidate scoring is the only place a vector enters PQ retrieval).
-    * The `batch` partition column of a batch-addressed store is layout,
-    * not data — dropped here ([[readCells]]'s rule). */
+  /** The LIVE code words of a [[writePqIndex]] store at `at`
+    * (tombstone-aware — candidate scoring is the only place a vector
+    * enters PQ retrieval; `batch` dropped, [[readCells]]'s rule). */
   def readPqCodes(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String): DataFrame = {
-    val t = VersionedStore.tableRoot(storeDir)
-    Tombstones.filterLive(
-      spark.read.parquet(s"$t/codes").drop("batch"), t, "id")
-  }
+      storeDir: String, at: StoreAt = Head): DataFrame =
+    VersionedStore.resolve(storeDir, at, "Ann.readPqCodes")
+      .live(spark, "codes", "id")
 
   /** Append a NEW vector batch to a [[writePqIndex]] store: the frozen
     * sub-codebooks load from the store (driver-sized), ONLY the batch
@@ -1552,10 +1270,10 @@ object Ann {
     * ([[encodedCells]]'s rationale). */
   private def encodedPqCodes(newVectors: DataFrame,
       dir: String): (String, DataFrame) = {
-    val books = readPqBooks(newVectors.sparkSession, dir)
-    (VersionedStore.tableRoot(dir),
-      newVectors.select(col("id").cast("long").as("id"),
-        pqCodesExpr(books, col("vec")).as("codes")))
+    val t = VersionedStore.tableRoot(dir)
+    val books = readPqBooksAt(newVectors.sparkSession, t)
+    (t, newVectors.select(col("id").cast("long").as("id"),
+      pqCodesExpr(books, col("vec")).as("codes")))
   }
 
   /** STREAMING-append form of [[appendToPqIndex]] —
@@ -1575,48 +1293,24 @@ object Ann {
       .parquet(s"$t/codes/batch=$batchId")
   }
 
-  /** [[readPqCodes]] PINNED at append batch `maxBatch` —
-    * [[readCellsAsOf]]'s contract on the PQ code table (batches past
-    * the pin partition-prune out of the plan; tombstones STILL apply;
-    * flat stores refuse loudly). */
-  def readPqCodesAsOf(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String, maxBatch: Long): DataFrame = {
-    val t = VersionedStore.tableRoot(storeDir)
-    val raw = spark.read.parquet(s"$t/codes")
-    require(raw.columns.contains("batch"),
-      s"readPqCodesAsOf: $storeDir is not batch-addressed — only" +
-        " appendToPqIndexBatch stores carry a pinnable append history")
-    Tombstones.filterLive(
-      raw.where(col("batch") <= maxBatch).drop("batch"), t, "id")
-  }
-
   /** PQ retrieval served FROM a persisted [[writePqIndex]] store —
     * [[pqTopK]]'s exact frame (broadcast LUT queries, code-word scan,
     * bounded per-partition heap, exact re-rank) with training and
     * encoding replaced by store reads: the books load once
     * (driver-sized), the corpus-sized input is ONE scan of the m-entry
     * code words, and only `queries × rerank` survivors fetch float
-    * vectors from `corpus` (id-keyed join into the lake). */
+    * vectors from `corpus` (id-keyed join into the lake). Books and
+    * codes resolve from ONE table root at `at` — a later retrain
+    * publishes new books, and a pin must never score old codes under
+    * them. */
   def pqTopKFromStore(queries: DataFrame, corpus: DataFrame,
-      storeDir: String, k: Int, rerank: Int = 50): DataFrame = {
+      storeDir: String, k: Int, rerank: Int = 50,
+      at: StoreAt = Head): DataFrame = {
     val spark = corpus.sparkSession
-    val books = readPqBooks(spark, storeDir)
-    val codes = readPqCodes(spark, storeDir)
+    val r = VersionedStore.resolve(storeDir, at, "Ann.pqTopKFromStore")
+    val codes = r.live(spark, "codes", "id")
       .select(col("id").as("neighbor_id"), col("codes"))
-    pqCore(queries, codes, books, corpus, k, rerank)
-  }
-
-  /** [[pqTopKFromStore]] against the [[readPqCodesAsOf]] pin — the
-    * books are frozen across appends, so the pinned state is exactly
-    * what the store served at batch `maxBatch`. */
-  def pqTopKFromStoreAsOf(queries: DataFrame, corpus: DataFrame,
-      storeDir: String, k: Int, maxBatch: Long, rerank: Int = 50)
-      : DataFrame = {
-    val spark = corpus.sparkSession
-    val books = readPqBooks(spark, storeDir)
-    val codes = readPqCodesAsOf(spark, storeDir, maxBatch)
-      .select(col("id").as("neighbor_id"), col("codes"))
-    pqCore(queries, codes, books, corpus, k, rerank)
+    pqCore(queries, codes, readPqBooksAt(spark, r.dir), corpus, k, rerank)
   }
 
   /** Write a PERSISTED IVF-PQ index for `corpus` into `dir` — the
@@ -1716,7 +1410,7 @@ object Ann {
     val coarse =
       collectCentroids(spark.read.parquet(s"$t/codebook")).sortBy(_._1)
     require(coarse.nonEmpty, s"appendToIvfPqIndex: empty codebook in $dir")
-    val books = readPqBooks(spark, dir)
+    val books = readPqBooksAt(spark, t)
     (t, residualFrame(newVectors, spark, coarse)
       .select(col("id"), col("cell_id"),
         pqCodesExpr(books, col("res")).as("codes")))
@@ -1746,64 +1440,34 @@ object Ann {
     * lookups, and only `queries × rerank` survivors fetch float vectors
     * from `corpus`.
     *
-    * Scale shape: the corpus-sized input is ONE scan of the m-entry
-    * code words restricted to probed cells (broadcast hash join on
-    * cell_id — the cells table is clustered by it); the LUT side is
-    * queries × nProbe rows of m·ksub doubles, broadcast; the rerank cut
-    * is a per-query window; the exact pass is id-keyed into the lake. */
+    * Codebook, books and cells resolve ONCE from one table root at `at`
+    * (both quantizers are frozen across appends, so an
+    * [[VersionedStore.AsOf]] state is exactly what the store served at
+    * that batch). `regime` picks the serving plan ([[Regime]]); under
+    * [[Shuffle]] the LUT is computed on the distributed probe frame
+    * instead of collected rows — the build is a projection, so it
+    * parallelizes with the frame.
+    *
+    * Scale shape (request regime): the corpus-sized input is ONE scan
+    * of the m-entry code words restricted to probed cells (broadcast
+    * hash join on cell_id — the cells table is clustered by it); the
+    * LUT side is queries × nProbe rows of m·ksub doubles, broadcast;
+    * the rerank cut is a per-query window; the exact pass is id-keyed
+    * into the lake. */
   def ivfPqTopKFromStore(queries: DataFrame, corpus: DataFrame,
-      storeDir: String, k: Int, nProbe: Int = 2, rerank: Int = 50)
-      : DataFrame = {
+      storeDir: String, k: Int, nProbe: Int = 2, rerank: Int = 50,
+      at: StoreAt = Head, regime: Regime = Request): DataFrame = {
     val spark = corpus.sparkSession
-    val t = VersionedStore.tableRoot(storeDir)
-    ivfPqServe(queries, corpus, storeDir,
-      Tombstones.filterLive(
-        spark.read.parquet(s"$t/cells").drop("batch"), t, "id"),
-      k, nProbe, rerank)
-  }
-
-  /** [[ivfPqTopKFromStore]] PINNED at append batch `maxBatch`
-    * ([[readCellsAsOf]]'s contract on the coded-cells table: both
-    * quantizers are frozen across appends, so the pinned state is
-    * exactly what the store served at batch `maxBatch`; tombstones
-    * still apply; flat stores refuse loudly). */
-  def ivfPqTopKFromStoreAsOf(queries: DataFrame, corpus: DataFrame,
-      storeDir: String, k: Int, maxBatch: Long, nProbe: Int = 2,
-      rerank: Int = 50): DataFrame = {
-    val spark = corpus.sparkSession
-    val t = VersionedStore.tableRoot(storeDir)
-    val raw = spark.read.parquet(s"$t/cells")
-    require(raw.columns.contains("batch"),
-      s"ivfPqTopKFromStoreAsOf: $storeDir is not batch-addressed — only" +
-        " appendToIvfPqIndexBatch stores carry a pinnable append history")
-    ivfPqServe(queries, corpus, storeDir,
-      Tombstones.filterLive(
-        raw.where(col("batch") <= maxBatch).drop("batch"), t, "id"),
-      k, nProbe, rerank)
-  }
-
-  private def ivfPqServe(queries: DataFrame, corpus: DataFrame,
-      storeDir: String, liveCells: DataFrame, k: Int, nProbe: Int,
-      rerank: Int): DataFrame =
-    ivfPqServeAt(queries, corpus, VersionedStore.tableRoot(storeDir),
-      liveCells, k, nProbe, rerank)
-
-  /** [[ivfPqServe]] against an already-resolved table root ([[
-    * readPqBooksAt]]'s rationale: a pinned serve loads ITS generation's
-    * quantizers). */
-  private def ivfPqServeAt(queries: DataFrame, corpus: DataFrame,
-      t: String, liveCells: DataFrame, k: Int, nProbe: Int,
-      rerank: Int): DataFrame = {
-    val spark = corpus.sparkSession
-    val centroids = spark.read.parquet(s"$t/codebook")
-    val books = readPqBooksAt(spark, t)
+    val who = "Ann.ivfPqTopKFromStore"
+    val r = VersionedStore.resolve(storeDir, at, who)
+    val books = readPqBooksAt(spark, r.dir)
     val m = books.length
     val ksub = books(0).length
-    val cells = liveCells.withColumnRenamed("id", "neighbor_id")
-    val probes = probeCells(queries, centroids, nProbe)
+    val cells = r.live(spark, "cells", "id")
+      .withColumnRenamed("id", "neighbor_id")
+    val probes = probeCells(queries, r.table(spark, "codebook"), nProbe)
       .withColumn("lut", adcLutExpr(books,
         zip_with(col("qvec"), col("cent"), (a, b) => a - b)))
-      .select("query_id", "cell_id", "lut")
     val approx = (0 until m).map(j =>
       element_at(col("lut"), col("codes").getItem(j) + lit(j * ksub + 1)))
       .reduce(_ + _)
@@ -1812,121 +1476,21 @@ object Ann {
     // ivfQuantizedCore's cut (the planted twin must reach the re-rank)
     val wApprox = Window.partitionBy(col("query_id"))
       .orderBy(col("adc").asc, col("neighbor_id").desc)
-    // literal probed-cell pushdown ([[materializeProbes]]), then dedup
-    // BEFORE the rerank cut (min ADC per (query, neighbor)): a
+    // dedup BEFORE the rerank cut (min ADC per (query, neighbor)): a
     // double-coded id — a corrupt store the fsck flags — must not
     // consume two rerank slots and evict a legitimate candidate from
     // the pool. The frame here is probed-cells-sized and already headed
     // into a per-query shuffle, so the aggregate is the same exchange
     // class the window needs, not a corpus-sized detour
-    val (probedIds, probesL) =
-      materializeProbes(probes, "ivfPqTopKFromStoreBatch",
+    val survivors = probeJoin(cells, probes, regime, who,
         "query_id", "cell_id", "lut")
-    val survivors = cells.where(col("cell_id").isin(probedIds: _*))
-      .join(broadcast(probesL), "cell_id")
       .where(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"), approx.as("adc"))
       .groupBy(col("query_id"), col("neighbor_id"))
       .agg(min(col("adc")).as("adc"))
       .withColumn("r", row_number().over(wApprox))
       .where(col("r") <= rerank)
-    val wA = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    survivors
-      .join(corpus.select(col("id").as("neighbor_id"), col("vec").as("cvec")),
-        "neighbor_id")
-      .join(broadcast(queries.select(col("id").as("query_id"),
-        col("vec").as("qvec"))), "query_id")
-      .withColumn("cosine", cosine(col("qvec"), col("cvec")))
-      .withColumn("rank", row_number().over(wA))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        round(col("cosine"), 6).as("cosine"))
-  }
-
-  /** SHUFFLE-regime [[ivfPqTopKFromStore]] for CORPUS-SIZED query
-    * batches — batch-serving parity for the COMPRESSED tier a 100 TB
-    * deployment actually serves (the family the request path's budget
-    * guard points at by name). Identical answers (same probe ranking,
-    * same per-(query,cell) residual ADC LUTs, same min-ADC dedup,
-    * rerank and tie-break rules); different plan: the probe frame —
-    * each row carrying its m·ksub-double LUT — is never collected,
-    * never broadcast, never a pushable literal; candidates come from a
-    * plain hash join of the stored code words to the probe frame on
-    * cell_id, and every later join is unhinted so AQE sizes it from
-    * measurements. Same stated trade as the int8 batch regime: the
-    * coded tier scans, which a corpus-sized batch makes moot (it
-    * probes every cell many times over). */
-  def ivfPqTopKFromStoreBatch(queries: DataFrame, corpus: DataFrame,
-      storeDir: String, k: Int, nProbe: Int = 2,
-      rerank: Int = 50): DataFrame = {
-    val spark = corpus.sparkSession
-    val t = VersionedStore.tableRoot(storeDir)
-    ivfPqBatchCore(queries, corpus, t,
-      Tombstones.filterLive(
-        spark.read.parquet(s"$t/cells").drop("batch"), t, "id"),
-      k, nProbe, rerank)
-  }
-
-  /** [[ivfPqTopKFromStoreBatch]] at a captured [[AnnPin]] — the pinned
-    * lake-annotation path on the compressed tier: all three tables
-    * (codebook, books, cells) resolve from the pinned generation, the
-    * cells additionally pinned at the recorded append batch
-    * ([[ivfQuantizedTopKFromStoreBatchPinned]]'s rationale). */
-  def ivfPqTopKFromStoreBatchPinned(queries: DataFrame, corpus: DataFrame,
-      storeDir: String, k: Int, pin: AnnPin, nProbe: Int = 2,
-      rerank: Int = 50): DataFrame = {
-    val spark = corpus.sparkSession
-    val t = VersionedStore.pinnedGenerationRoot(storeDir, pin.gen,
-      pin.maxBatch, "Ann.ivfPqTopKFromStoreBatchPinned")
-    ivfPqBatchCore(queries, corpus, t,
-      liveRowsAt(spark, t, "cells", pin.maxBatch), k, nProbe, rerank)
-  }
-
-  private def ivfPqBatchCore(queries: DataFrame, corpus: DataFrame,
-      t: String, liveCells: DataFrame, k: Int, nProbe: Int,
-      rerank: Int): DataFrame = {
-    val spark = corpus.sparkSession
-    val centroids = spark.read.parquet(s"$t/codebook")
-    val books = readPqBooksAt(spark, t)
-    val m = books.length
-    val ksub = books(0).length
-    val cells = liveCells.withColumnRenamed("id", "neighbor_id")
-    // per-(query, cell) residual LUT — ivfPqServeAt's expression
-    // verbatim, but COMPUTED ON THE DISTRIBUTED probe frame (queries ×
-    // nProbe rows of m·ksub doubles) instead of collected rows: the
-    // LUT build is a projection, so it parallelizes with the frame
-    val probes = probeCells(queries, centroids, nProbe)
-      .withColumn("lut", adcLutExpr(books,
-        zip_with(col("qvec"), col("cent"), (a, b) => a - b)))
-      .select("query_id", "cell_id", "lut")
-    val approx = (0 until m).map(j =>
-      element_at(col("lut"), col("codes").getItem(j) + lit(j * ksub + 1)))
-      .reduce(_ + _)
-    // same ordering contracts as the request regime: min ADC per
-    // (query, neighbor) BEFORE the cut, ties keep the largest ids
-    val wApprox = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc").asc, col("neighbor_id").desc)
-    val survivors = cells
-      .join(probes, "cell_id")
-      .where(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"), approx.as("adc"))
-      .groupBy(col("query_id"), col("neighbor_id"))
-      .agg(min(col("adc")).as("adc"))
-      .withColumn("r", row_number().over(wApprox))
-      .where(col("r") <= rerank)
-    val wA = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    survivors
-      .join(corpus.select(col("id").as("neighbor_id"), col("vec").as("cvec")),
-        "neighbor_id")
-      .join(queries.select(col("id").as("query_id"), col("vec").as("qvec")),
-        "query_id")
-      .withColumn("cosine", cosine(col("qvec"), col("cvec")))
-      .withColumn("rank", row_number().over(wA))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        round(col("cosine"), 6).as("cosine"))
+    exactTopK(survivors, queries, corpus, k, regime)
   }
 
   /** Takedown GC for a [[writePqIndex]] store: one fresh-generation
@@ -2032,18 +1596,7 @@ object Ann {
       // double-coded id the fsck would flag — cannot emit the same
       // neighbor twice in a served top-k
       .dropDuplicates("query_id", "neighbor_id")
-    val wA = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    partial
-      .join(corpus.select(col("id").as("neighbor_id"), col("vec").as("cvec")),
-        "neighbor_id")
-      .join(broadcast(queries.select(col("id").as("query_id"),
-        col("vec").as("qvec"))), "query_id")
-      .withColumn("cosine", cosine(col("qvec"), col("cvec")))
-      .withColumn("rank", row_number().over(wA))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        round(col("cosine"), 6).as("cosine"))
+    exactTopK(partial, queries, corpus, k, Request)
   }
 
   /** Lloyd's k-means over an (id, vec) frame — trains the IVF codebook

@@ -100,13 +100,13 @@ object Classifier {
     * Retention is [[save]]'s `keepGenerations` — with the default 0,
     * save stays the unlearn path's ERASURE DEADLINE and retires every
     * older pin, which then fails LOUDLY here
-    * ([[VersionedStore.pinnedGenerationRoot]]); raising it deliberately
+    * ([[VersionedStore.resolve]]); raising it deliberately
     * trades that deadline for reproducible model pins, the caller's
     * compliance decision to make. */
   def loadPinned(spark: org.apache.spark.sql.SparkSession, dir: String,
       gen: Long): Model = {
-    val t = VersionedStore.pinnedGenerationRoot(dir, gen, None,
-      "Classifier.loadPinned")
+    val t = VersionedStore.resolve(dir, VersionedStore.Pin(gen, None),
+      "Classifier.loadPinned").dir
     Model(
       counts = spark.read.parquet(s"$t/counts"),
       classes = spark.read.parquet(s"$t/classes"),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFunctions, VectorFunctions}
+import VersionedStore.{Head, StoreAt}
 
 /** Document deduplication family for training-data pipelines: exact,
   * MinHash+LSH, SimHash, n-gram Jaccard, embedding-cosine near-dup.
@@ -420,30 +421,29 @@ object Dedup {
       sigsAll, k, jaccardThreshold)
 
   /** The LIVE signature rows of a persisted signature store (the
-    * `sigs/` table of the minhash-store layout): stored rows minus any
-    * [[tombstoneSignatures]] takedowns — the [[Tombstones]] discipline
-    * on the dedup store family. A taken-down doc must stop generating
-    * candidate pairs (it can otherwise keep winning keep-one elections
-    * or re-linking clusters long after its takedown), and the signature
-    * table is the only place it enters candidate generation. On a
-    * batch-addressed store ([[appendToSignatureStoreBatch]]) the
-    * discovered `batch` partition column is LAYOUT, not data — dropped
-    * here so every consumer sees one schema either way. */
+    * `sigs/` table of the minhash-store layout) at `at`: stored rows
+    * minus any [[tombstoneSignatures]] takedowns — the [[Tombstones]]
+    * discipline on the dedup store family. A taken-down doc must stop
+    * generating candidate pairs (it can otherwise keep winning keep-one
+    * elections or re-linking clusters long after its takedown), and the
+    * signature table is the only place it enters candidate generation;
+    * takedowns apply under every bound, so time travel never resurrects
+    * a deleted doc's candidate pairs. On a batch-addressed store
+    * ([[appendToSignatureStoreBatch]]) the `batch` partition column is
+    * LAYOUT, not data — dropped so every consumer sees one schema
+    * either way. */
   def readSignatureStore(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String): DataFrame = {
-    val t = VersionedStore.tableRoot(storeDir)
-    Tombstones.filterLive(
-      spark.read.parquet(s"$t/sigs").drop("batch"), t, "id")
-  }
+      storeDir: String, at: StoreAt = Head): DataFrame =
+    VersionedStore.resolve(storeDir, at, "Dedup.readSignatureStore")
+      .live(spark, "sigs", "id")
 
-  /** The LIVE banded blocking rows of a persisted signature store
-    * (tombstone-aware like [[readSignatureStore]]). */
+  /** The LIVE banded blocking rows of a persisted signature store at
+    * `at` (tombstone-aware like [[readSignatureStore]]; candidate
+    * generation pins to the same snapshot as the signature estimate). */
   def readBandedStore(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String): DataFrame = {
-    val t = VersionedStore.tableRoot(storeDir)
-    Tombstones.filterLive(
-      spark.read.parquet(s"$t/banded").drop("batch"), t, "id")
-  }
+      storeDir: String, at: StoreAt = Head): DataFrame =
+    VersionedStore.resolve(storeDir, at, "Dedup.readBandedStore")
+      .live(spark, "banded", "id")
 
   /** Render a PERSISTED minhash signature store for `docs` into `dir` —
     * the one-time corpus onboarding of the signature-store dedup
@@ -463,8 +463,8 @@ object Dedup {
     * `batch=<id>` partition dirs, so the store is maintained by
     * [[appendToSignatureStoreBatch]] for life — partition discovery
     * rejects a layout that mixes flat files with batch subdirs, and the
-    * batch history is what [[readSignatureStoreAsOf]] /
-    * [[pinSignatureStore]] pin. */
+    * batch history is what an AsOf bound or a [[VersionedStore.pin]]
+    * pins. */
   def writeSignatureStore(docs: DataFrame, dir: String,
       textCol: String = "text", idCol: String = "doc_id",
       shingleN: Int = 3, k: Int = 64, bands: Int = 16,
@@ -538,98 +538,22 @@ object Dedup {
     } finally sigs.unpersist()
   }
 
-  /** [[readSignatureStore]] PINNED at append batch `maxBatch` —
-    * snapshot reproducibility for a batch-addressed signature store:
-    * only batches ≤ `maxBatch` scan (partition pruning — later batches'
-    * files never enter the plan), so a training run can replay the
-    * exact dedup decision set it was curated under after any number of
-    * later appends. Same deliberate asymmetry as every as-of read here:
-    * TOMBSTONES STILL APPLY — a takedown is legal erasure, and time
-    * travel must never resurrect a deleted doc's candidate pairs. */
-  def readSignatureStoreAsOf(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String, maxBatch: Long): DataFrame = {
-    val t = VersionedStore.tableRoot(storeDir)
-    val raw = spark.read.parquet(s"$t/sigs")
-    require(raw.columns.contains("batch"),
-      s"readSignatureStoreAsOf: $storeDir is not batch-addressed — only" +
-        " appendToSignatureStoreBatch stores carry a pinnable append" +
-        " history")
-    Tombstones.filterLive(
-      raw.where(col("batch") <= maxBatch).drop("batch"), t, "id")
-  }
-
-  /** As-of twin of [[readBandedStore]] — candidate generation pins to
-    * the same snapshot as the signature estimate. */
-  def readBandedStoreAsOf(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String, maxBatch: Long): DataFrame = {
-    val t = VersionedStore.tableRoot(storeDir)
-    val raw = spark.read.parquet(s"$t/banded")
-    require(raw.columns.contains("batch"),
-      s"readBandedStoreAsOf: $storeDir is not batch-addressed — only" +
-        " appendToSignatureStoreBatch stores carry a pinnable append" +
-        " history")
-    Tombstones.filterLive(
-      raw.where(col("batch") <= maxBatch).drop("batch"), t, "id")
-  }
-
-  /** ONE time-travel coordinate for a signature store — the dedup twin
-    * of [[Ann.AnnPin]] / [[Retrieval.RetrievalPin]]: `gen` is the
-    * [[VersionedStore]] generation (whole rebuilds/compactions),
-    * `maxBatch` the append batch WITHIN it (`None` on a store without
-    * the batch-addressed layout). A curation job captures this at read
-    * time ([[pinSignatureStore]]) and records a single token; the
-    * `*Pinned` readers then reproduce the exact store state its dedup
-    * decisions were made against — across later appends AND later
-    * publishes — without knowing which axis moved. Tombstones
-    * deliberately still apply; a gc-retired pin fails LOUDLY
-    * ([[VersionedStore.pinnedGenerationRoot]]), never serves a substitute. */
-  final case class DedupPin(gen: Long, maxBatch: Option[Long])
-
-  /** Capture the CURRENT pin of a versioned signature store: the
-    * flipped generation plus the highest append batch inside it.
-    * Metadata-only: one pointer resolution + one directory listing. */
-  def pinSignatureStore(storeDir: String): DedupPin = {
-    val (gen, maxBatch) = VersionedStore.pinCoordinate(storeDir, "sigs",
-      "Dedup.pinSignatureStore")
-    DedupPin(gen, maxBatch)
-  }
-
-  /** The live rows of `table` under an already-resolved generation dir,
-    * optionally pinned at a max append batch — [[Ann]]'s `liveRowsAt`
-    * discipline on the dedup tables. */
-  private def liveSigRowsAt(spark: org.apache.spark.sql.SparkSession,
-      genRoot: String, table: String, maxBatch: Option[Long]): DataFrame =
-    VersionedStore.liveRowsAt(spark, genRoot, table, maxBatch, "id")
-
-  /** [[readSignatureStore]] at a captured [[DedupPin]]. */
-  def readSignatureStorePinned(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String, pin: DedupPin): DataFrame =
-    liveSigRowsAt(spark, VersionedStore.pinnedGenerationRoot(storeDir,
-      pin.gen, pin.maxBatch, "Dedup.readSignatureStorePinned"),
-      "sigs", pin.maxBatch)
-
-  /** [[readBandedStore]] at a captured [[DedupPin]]. */
-  def readBandedStorePinned(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String, pin: DedupPin): DataFrame =
-    liveSigRowsAt(spark, VersionedStore.pinnedGenerationRoot(storeDir,
-      pin.gen, pin.maxBatch, "Dedup.readBandedStorePinned"),
-      "banded", pin.maxBatch)
-
-  /** The store's full near-dup candidate pair set (estimate stage) at a
-    * captured [[DedupPin]]: banding, candidate generation AND the
-    * signature-match estimate all resolve from the pinned snapshot, so
-    * the pairs are exactly the ones the store would have served when
-    * the pin was captured (modulo takedowns, which always apply). Feed
-    * the result to [[ngramJaccardVerify]] for the exact-verify stage —
-    * document text lives in the lake, not the store, and verification
-    * is collision-bounded either way. */
-  def nearDupPairsFromStorePinned(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String, pin: DedupPin, k: Int = 64,
-      jaccardThreshold: Double = 0.5): DataFrame = {
-    val banded = readBandedStorePinned(spark, storeDir, pin)
+  /** The store's full near-dup candidate pair set (estimate stage) at
+    * `at`: banding, candidate generation AND the signature-match
+    * estimate all resolve from ONE table root, so under a pin the pairs
+    * are exactly the ones the store served when the pin was captured
+    * (modulo takedowns, which always apply). Feed the result to
+    * [[ngramJaccardVerify]] for the exact-verify stage — document text
+    * lives in the lake, not the store, and verification is
+    * collision-bounded either way. */
+  def nearDupPairsFromStore(spark: org.apache.spark.sql.SparkSession,
+      storeDir: String, k: Int = 64, jaccardThreshold: Double = 0.5,
+      at: StoreAt = Head): DataFrame = {
+    val r = VersionedStore.resolve(storeDir, at, "Dedup.nearDupPairsFromStore")
+    val banded = r.live(spark, "banded", "id")
     estimatePairsFromSignatures(
       incrementalCandidatesFromBanded(banded, banded),
-      readSignatureStorePinned(spark, storeDir, pin), k, jaccardThreshold)
+      r.live(spark, "sigs", "id"), k, jaccardThreshold)
   }
 
   /** Compact a [[writeSignatureStore]] store in place — the takedown GC

@@ -20,8 +20,10 @@ import org.apache.spark.sql.types.StructType
   * so the emitted file is what a one-task `df.write.parquet` would have
   * produced: same logical types, same codec, a Spark-style
   * `part-00000-<uuid>.c000.<codec>.parquet` name and a `_SUCCESS`
-  * marker (the layout checks treat marker files as layout, and the
-  * DuckDB oracle reads the stores — the byte-compat gate).
+  * marker unless `mapreduce.fileoutputcommitter.marksuccessfuljobs` is
+  * false in the session's Hadoop conf (the layout checks treat marker
+  * files as layout, and the DuckDB oracle reads the stores — the
+  * byte-compat gate).
   *
   * Scope: only frames whose OPTIMIZED plan collapses to a
   * [[LocalRelation]] (possibly under coalesce/repartition nodes — the
@@ -79,8 +81,12 @@ private[graft] object DriverParquet {
         try rows.foreach(writer.write)
         finally writer.close()
         // the distributed writer's commit marker — layout parity for
-        // the fsck marker checks and human inspection
-        StoreFs.createExclusive(s"$dir/_SUCCESS")
+        // the fsck marker checks and human inspection — under the same
+        // committer setting that writer honors
+        if (job.getConfiguration.getBoolean(org.apache.hadoop.mapreduce
+            .lib.output.FileOutputCommitter.SUCCESSFUL_JOB_OUTPUT_DIR_MARKER,
+            true))
+          StoreFs.createExclusive(s"$dir/_SUCCESS")
         true
     }
 }

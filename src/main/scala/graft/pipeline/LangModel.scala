@@ -116,8 +116,8 @@ object LangModel {
     * `keepGenerations`, and a gc-retired pin fails loudly. */
   def loadPinned(spark: org.apache.spark.sql.SparkSession, dir: String,
       gen: Long): Model = {
-    val t = VersionedStore.pinnedGenerationRoot(dir, gen, None,
-      "LangModel.loadPinned")
+    val t = VersionedStore.resolve(dir, VersionedStore.Pin(gen, None),
+      "LangModel.loadPinned").dir
     Model(
       uni = spark.read.parquet(s"$t/uni"),
       bi = spark.read.parquet(s"$t/bi"),

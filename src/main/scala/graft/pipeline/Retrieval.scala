@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import VersionedStore.{Head, StoreAt}
+
 /** Corpus relevance scoring (BM25): rank every document against a term
   * query with the Robertson/Okapi weighting — the retrieval primitive
   * behind "find the training documents about X", targeted decontamination
@@ -197,8 +199,8 @@ object Retrieval {
     * born as `batch=<id>` partition dirs, so the store is maintained by
     * [[appendToPostingsIndexBatch]] for life — partition discovery
     * rejects a layout that mixes flat files with batch subdirs, and the
-    * batch history is what [[readPostingsIndexAsOf]]/[[pinPostings]]
-    * pin. */
+    * batch history is what an AsOf bound or a [[VersionedStore.pin]]
+    * pins. */
   def writePostingsIndex(docs: DataFrame, dir: String, numFiles: Int = 4,
       idCol: String = "doc_id", textCol: String = "text",
       batchId: Option[Long] = None): Unit = {
@@ -287,15 +289,18 @@ object Retrieval {
     Overlap.settle(a, b)
   }
 
-  /** The LIVE postings of a persisted index (feed to [[phraseSearch]] /
-    * [[proximitySearch]] / [[bm25TopKFromIndex]]): the stored rows minus
-    * any [[tombstoneDocs]] takedowns — no takedowns, no plan overhead;
-    * otherwise one broadcast anti-join on doc_id (request-sized set). */
+  /** The LIVE postings of a persisted index at `at` (feed to
+    * [[phraseSearch]] / [[proximitySearch]] / [[bm25TopKFromIndex]] to
+    * serve — or, under a [[VersionedStore.Pin]] or
+    * [[VersionedStore.AsOf]] bound, replay — any retrieval surface): the
+    * stored rows minus any [[tombstoneDocs]] takedowns (no takedowns, no
+    * plan overhead; otherwise one broadcast anti-join on doc_id), the
+    * layout `batch` column dropped. Takedowns apply under every bound —
+    * a bound pins the append history, never resurrects erased docs. */
   def readPostingsIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    val t = VersionedStore.tableRoot(dir)
-    Tombstones.filterLive(spark.read.parquet(s"$t/postings"), t, "doc_id")
-  }
+      dir: String, at: StoreAt = Head): DataFrame =
+    VersionedStore.resolve(dir, at, "Retrieval.readPostingsIndex")
+      .live(spark, "postings", "doc_id")
 
   /** Record a takedown against a [[writePostingsIndex]] store: the docs
     * leave every serving surface AT ONCE — phrase/proximity hits, KWIC
@@ -317,101 +322,17 @@ object Retrieval {
   def tombstoneDocsDf(ids: DataFrame, dir: String): Unit =
     Tombstones.appendDf(ids, dir)
 
-  /** SNAPSHOT-PINNED read of a stream-maintained postings store (one
-    * built by [[appendToPostingsIndexBatch]], whose `batch=` partition
-    * column is the append history): only batches ≤ `maxBatch` are
-    * scanned (partition pruning — later batches' files are never
-    * listed into the plan), so a training run can pin the exact index
-    * state it was built against and reproduce it after any number of
-    * later appends. Deliberate asymmetry: TOMBSTONES STILL APPLY.
-    * A takedown is legal erasure, and a time-travel read that
-    * resurrected deleted docs would defeat it — so as-of pins the
-    * append history, never the delete history. */
-  def readPostingsIndexAsOf(spark: org.apache.spark.sql.SparkSession,
-      dir: String, maxBatch: Long): DataFrame = {
-    val t = VersionedStore.tableRoot(dir)
-    val stored = spark.read.parquet(s"$t/postings")
-    require(stored.columns.contains("batch"),
-      s"readPostingsIndexAsOf: $dir is not batch-addressed (flat store)")
-    Tombstones.filterLive(stored.where(col("batch") <= maxBatch),
-      t, "doc_id")
+  /** [[bm25TopKFromIndex]] served from a [[writePostingsIndex]] store at
+    * `at`: postings AND length norms resolve from ONE table root, so a
+    * pinned score is the one the store served when the pin was captured
+    * (modulo takedowns, which always apply). */
+  def bm25TopKFromStore(spark: org.apache.spark.sql.SparkSession,
+      dir: String, terms: Seq[String], k: Int, k1: Double = 1.2,
+      b: Double = 0.75, at: StoreAt = Head): DataFrame = {
+    val r = VersionedStore.resolve(dir, at, "Retrieval.bm25TopKFromStore")
+    bm25TopKFromIndex(r.live(spark, "postings", "doc_id"),
+      r.live(spark, "doclens", "doc_id"), terms, k, k1, b)
   }
-
-  /** As-of twin of [[readDocLengths]] for batch-addressed stores —
-    * pins BM25's corpus statistics to the same snapshot. */
-  def readDocLengthsAsOf(spark: org.apache.spark.sql.SparkSession,
-      dir: String, maxBatch: Long): DataFrame = {
-    val t = VersionedStore.tableRoot(dir)
-    val stored = spark.read.parquet(s"$t/doclens")
-    require(stored.columns.contains("batch"),
-      s"readDocLengthsAsOf: $dir is not batch-addressed (flat store)")
-    Tombstones.filterLive(stored.where(col("batch") <= maxBatch),
-      t, "doc_id")
-  }
-
-  /** ONE time-travel coordinate for a postings store — the retrieval
-    * twin of [[Ann.AnnPin]]: `gen` is the [[VersionedStore]] generation
-    * (whole rebuilds/compactions), `maxBatch` the append batch WITHIN
-    * it (`None` on a store without the batch-addressed layout). A
-    * training job captures this at read time ([[pinPostings]]) and
-    * records a single token; the `*Pinned` readers then reproduce the
-    * exact index state it retrieved against — across any number of
-    * later appends AND later publishes — without knowing which axis
-    * moved. Tombstones deliberately still apply (takedowns fan into
-    * every retained generation's overlay): a pin reproduces the append
-    * history, never resurrects erasure. The pin dies when
-    * [[VersionedStore.gc]] retires its generation — retention is the
-    * caller's policy, and a dead pin fails LOUDLY
-    * ([[VersionedStore.pinnedGenerationRoot]]), never serves a substitute. */
-  final case class RetrievalPin(gen: Long, maxBatch: Option[Long])
-
-  /** Capture the CURRENT pin of a versioned postings store: the flipped
-    * generation plus the highest append batch inside it. Metadata-only:
-    * one pointer resolution + one directory listing (the `batch=<id>`
-    * partition dirs), never a table scan. */
-  def pinPostings(dir: String): RetrievalPin = {
-    val (gen, maxBatch) = VersionedStore.pinCoordinate(dir, "postings",
-      "Retrieval.pinPostings")
-    RetrievalPin(gen, maxBatch)
-  }
-
-  /** The live rows of `table` under an already-resolved generation dir,
-    * optionally pinned at a max append batch — [[Ann]]'s `liveRowsAt`
-    * discipline on the doc_id-keyed tables: batches past the pin
-    * partition-prune out of the plan, the generation's own tombstone
-    * overlay still applies (erasure holds under time travel), and the
-    * layout `batch` column never reaches a consumer. */
-  private def liveDocsAt(spark: org.apache.spark.sql.SparkSession,
-      genRoot: String, table: String, maxBatch: Option[Long]): DataFrame =
-    VersionedStore.liveRowsAt(spark, genRoot, table, maxBatch, "doc_id")
-
-  /** [[readPostingsIndex]] at a captured [[RetrievalPin]] — feed to
-    * [[phraseSearch]]/[[proximitySearch]]/[[bm25TopKFromIndex]] to
-    * replay any retrieval surface at the pinned snapshot. */
-  def readPostingsIndexPinned(spark: org.apache.spark.sql.SparkSession,
-      dir: String, pin: RetrievalPin): DataFrame =
-    liveDocsAt(spark, VersionedStore.pinnedGenerationRoot(dir, pin.gen,
-      pin.maxBatch, "Retrieval.readPostingsIndexPinned"),
-      "postings", pin.maxBatch)
-
-  /** [[readDocLengths]] at a captured [[RetrievalPin]] — BM25's corpus
-    * statistics (N, avgdl, df) pin to the same snapshot, which is what
-    * makes a pinned score bit-identical to the score served then. */
-  def readDocLengthsPinned(spark: org.apache.spark.sql.SparkSession,
-      dir: String, pin: RetrievalPin): DataFrame =
-    liveDocsAt(spark, VersionedStore.pinnedGenerationRoot(dir, pin.gen,
-      pin.maxBatch, "Retrieval.readDocLengthsPinned"),
-      "doclens", pin.maxBatch)
-
-  /** [[bm25TopKFromIndex]] at a captured [[RetrievalPin]]: postings AND
-    * length norms resolve from the pinned generation at the pinned
-    * append batch, so the scores are the ones the store served when the
-    * pin was captured (modulo takedowns, which always apply). */
-  def bm25TopKFromStorePinned(spark: org.apache.spark.sql.SparkSession,
-      dir: String, pin: RetrievalPin, terms: Seq[String], k: Int,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    bm25TopKFromIndex(readPostingsIndexPinned(spark, dir, pin),
-      readDocLengthsPinned(spark, dir, pin), terms, k, k1, b)
 
   /** Compact a [[writePostingsIndex]] store in place: a long trickle of
     * single-file [[appendToPostingsIndex]] batches accumulates many
@@ -449,23 +370,26 @@ object Retrieval {
     // A batch-addressed (stream-maintained) store keeps its FULL
     // batch=<id> layout through the rewrite — the [[Ann.compactIndexCells]]
     // rule: compaction drops tombstoned rows only, a row's batch
-    // identity is preserved, never rolled up — so as-of reads
-    // ([[readPostingsIndexAsOf]]) and pins ([[pinPostings]]) stay exact
-    // across the GC and post-compaction [[appendToPostingsIndexBatch]]
-    // writes keep working. Batched files cluster by (batch, token) so
-    // each batch dir keeps the token-range point-read discipline.
-    val batched = spark.read
-      .parquet(s"${VersionedStore.tableRoot(dir)}/postings")
-      .columns.contains("batch")
+    // identity is preserved, never rolled up — so AsOf and Pin bounds
+    // stay exact across the GC and post-compaction
+    // [[appendToPostingsIndexBatch]] writes keep working. Batched files
+    // cluster by (batch, token) so each batch dir keeps the token-range
+    // point-read discipline.
+    val t0 = VersionedStore.tableRoot(dir)
+    // raw reads keep the discovered batch column (the public readers
+    // drop it — layout, not data — but the rewrite must preserve it)
+    def live(table: String): DataFrame = Tombstones.filterLive(
+      spark.read.parquet(s"$t0/$table"), t0, "doc_id")
+    val postings = live("postings")
+    val batched = postings.columns.contains("batch")
     def shaped(df: DataFrame): DataFrame =
       if (batched)
         df.repartitionByRange(numFiles, col("batch"), col("token"))
           .sortWithinPartitions("batch", "token", "doc_id", "pos")
       else df.repartitionByRange(numFiles, col("token"))
         .sortWithinPartitions("token", "doc_id", "pos")
-    val postingsLive = shaped(readPostingsIndex(spark, dir)) // takedown GC
-    val doclensLive = readDocLengths(spark, dir)
-      .coalesce(math.min(numFiles, 2))
+    val postingsLive = shaped(postings) // takedown GC
+    val doclensLive = live("doclens").coalesce(math.min(numFiles, 2))
     if (VersionedStore.isVersioned(dir)) {
       // live reads above are lazy plans over the OLD generation; publish
       // writes them into the new one, then gc retires everything the
@@ -495,14 +419,14 @@ object Retrieval {
     }
   }
 
-  /** The LIVE doc-length norms of a persisted index (tombstone-aware,
-    * like [[readPostingsIndex]] — BM25's N/avgdl/df derive from this
-    * table, so takedowns shrink the corpus statistics too). */
+  /** The LIVE doc-length norms of a persisted index at `at`
+    * (tombstone-aware, like [[readPostingsIndex]] — BM25's N/avgdl/df
+    * derive from this table, so takedowns shrink the corpus statistics
+    * too, and a bound pins them to the same snapshot as the postings). */
   def readDocLengths(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    val t = VersionedStore.tableRoot(dir)
-    Tombstones.filterLive(spark.read.parquet(s"$t/doclens"), t, "doc_id")
-  }
+      dir: String, at: StoreAt = Head): DataFrame =
+    VersionedStore.resolve(dir, at, "Retrieval.readDocLengths")
+      .live(spark, "doclens", "doc_id")
 
   /** BM25 top-k served FROM a persisted [[writePostingsIndex]] store —
     * bit-identical scores to [[bm25TopK]] (same per-term floor-then-sum

@@ -115,13 +115,15 @@ object StoreFs {
     else walkFiles(fs, p).map(_.getPath.getName).filter(_.endsWith(suffix))
   }
 
-  /** Recursive file statuses under `dir`: (full path, name, mtime).
-    * Empty when absent. The event-log writer's stamp bookkeeping. */
-  def listFileStatusesRecursive(dir: String): Seq[(String, String, Long)] = {
+  /** Recursive file statuses under `dir`: (full path, name, mtime,
+    * length). Empty when absent. The event-log writer's stamp
+    * bookkeeping and [[PlanCache.fileSalt]]'s content listing. */
+  def listFileStatusesRecursive(dir: String)
+      : Seq[(String, String, Long, Long)] = {
     val (fs, p) = fsPath(dir)
     if (!fs.exists(p)) Seq.empty
-    else walkFiles(fs, p).map(st =>
-      (st.getPath.toString, st.getPath.getName, st.getModificationTime))
+    else walkFiles(fs, p).map(st => (st.getPath.toString,
+      st.getPath.getName, st.getModificationTime, st.getLen))
   }
 
   /** Set a file's modification time (the event-log generation stamp);

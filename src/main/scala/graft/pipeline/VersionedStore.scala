@@ -34,9 +34,9 @@ import org.apache.spark.sql.functions.col
   *     [[StoreFsck.versionedStore]] finding plus [[gc]] fodder — dead
   *     bytes, never wrong answers;
   *   - old generations stay readable until [[gc]] retires them, which
-  *     gives snapshot pinning ([[readAsOf]]) for free — the
-  *     reproducibility contract [[Retrieval.readPostingsIndexAsOf]]
-  *     provides for batch-addressed appends, here for whole rebuilds.
+  *     gives snapshot pinning ([[readAsOf]], a [[Pin]] bound) for free
+  *     — the reproducibility an [[AsOf]] bound provides for
+  *     batch-addressed appends, here for whole rebuilds.
   *
   * Scale shape: the pointer is metadata (one file, a handful of bytes);
   * generation writes are the same distributed table writes the
@@ -53,7 +53,7 @@ import org.apache.spark.sql.functions.col
   * Takedowns are an O(request) PER-GENERATION TOMBSTONE OVERLAY
   * ([[takedownDf]]): the id set appends under every retained complete
   * generation's own `gen-<id>/tombstones`, live reads
-  * ([[readLive]]/[[readAsOfLive]] and every store-family reader) anti-join
+  * ([[Resolved.live]], behind every store-family reader) anti-join
   * it, and the next [[publish]] — built from live rows — starts with an
   * empty set, making the eventual physical rewrite ride a publish that was
   * happening anyway instead of forcing an immediate corpus-sized republish.
@@ -488,45 +488,87 @@ object VersionedStore {
         genDir(root, g)
     }
 
-  /** The directory holding generation `gen`'s tables — [[tableRoot]]'s
-    * pinned counterpart, for readers that captured a pin and resolve
-    * every table of one consistent generation from it (e.g.
-    * [[graft.pipeline.Ann]]'s pinned servers, whose codebook/books and
-    * coded rows must come from the SAME training). Loud on an absent or
-    * incomplete generation, like [[readAsOf]]. */
-  def generationRoot(root: String, gen: Long): String = {
-    require(StoreFs.exists(s"${genDir(root, gen)}/$Marker"),
-      s"VersionedStore.generationRoot: generation $gen at $root is absent" +
-        " or incomplete (crashed publish, or gc'd past the retention you" +
-        " need)")
-    genDir(root, gen)
+  /** Which state of a store a read sees — the position a consumer
+    * reads at, as a Databus consumer reads a stream at the relay head
+    * or replays from a checkpointed SCN:
+    *
+    *   - [[Head]] — the current generation, every append batch;
+    *   - [[AsOf]] — the current table root ([[tableRoot]], so a flat
+    *     batch-addressed root too), append batches ≤ `maxBatch` only:
+    *     the append-history pin of a stream-maintained store;
+    *   - [[Pin]] — generation `gen`, append batches ≤ `maxBatch` when
+    *     set: the ONE time-travel token ([[pin]] captures it) that
+    *     replays a store across later appends AND later publishes.
+    *
+    * Tombstones apply under every bound — a bound reproduces the
+    * append history, never the delete history ([[takedownDf]] fans
+    * into every retained generation's overlay), so time travel never
+    * resurrects erased rows. */
+  sealed trait StoreAt
+  case object Head extends StoreAt
+  final case class AsOf(maxBatch: Long) extends StoreAt
+
+  /** A captured (generation, maxBatch) coordinate; `maxBatch` is None
+    * on a store without the batch-addressed layout. A pin lives as long
+    * as its generation: an UNREGISTERED pin is a client-held token with
+    * no server-side footprint, retired with its generation by gc or
+    * compaction (`keepGenerations` later publishes); a job that must
+    * outlive that registers it ([[registerPin]]), which gc spares until
+    * release or lease expiry. */
+  final case class Pin(gen: Long, maxBatch: Option[Long]) extends StoreAt
+
+  /** A [[StoreAt]] bound resolved ONCE to the directory every table of
+    * one read comes from — a codebook, its books and the coded rows of
+    * one serve call can then never straddle two generations, even when
+    * a publish lands mid-call — plus the append-batch cut. */
+  final case class Resolved(dir: String, maxBatch: Option[Long]) {
+
+    /** Table `name` as stored (the driver-sized quantizer tables). */
+    def table(spark: SparkSession, name: String): DataFrame =
+      spark.read.parquet(s"$dir/$name")
+
+    /** The LIVE rows of table `name`, keyed by `idCol`: batches past
+      * the cut partition-prune out of the plan, the resolved root's
+      * tombstone overlay applies (one broadcast anti-join, nothing
+      * without takedowns), and the layout `batch` column never reaches
+      * a consumer. Loud when the bound names an append batch but the
+      * table carries no batch-addressed layout. */
+    def live(spark: SparkSession, name: String, idCol: String): DataFrame = {
+      val raw = table(spark, name)
+      val cut = maxBatch.fold(raw) { mb =>
+        require(raw.columns.contains("batch"),
+          s"VersionedStore: $dir/$name is not batch-addressed but the" +
+            s" read is bounded at append batch $mb — only stores built" +
+            " by the append…Batch forms carry a pinnable append history")
+        raw.where(col("batch") <= mb)
+      }
+      Tombstones.filterLive(cut.drop("batch"), dir, idCol)
+    }
   }
 
-  /** [[generationRoot]] for a PIN resolve — every `*FromStorePinned` /
-    * `loadPinned` server's first step, so a pin that outlived retention
-    * fails with a NAMED, actionable error (which pin, which store, what
-    * the retention rule is, how to hold a generation) instead of the
-    * raw path-not-found a gc'd generation would otherwise surface from
-    * deep inside a parquet scan. The retention contract: an UNREGISTERED
-    * pin is a client-held token with no server-side footprint — it lives
-    * exactly as long as its generation survives gc/compaction
-    * (`keepGenerations` later publishes); a training job that must
-    * outlive that registers the pin ([[registerPin]]), which gc spares
-    * until release or lease expiry. Reference analogue: an SCN that
-    * fell off the relay's retention gets a NAMED too-old answer
-    * (SCNNotFoundException) routing the client to bootstrap — never a
-    * raw read error. */
-  def pinnedGenerationRoot(root: String, gen: Long, maxBatch: Option[Long],
-      who: String): String = {
-    if (!StoreFs.exists(s"${genDir(root, gen)}/$Marker"))
-      throw new IllegalStateException(
-        s"$who: pin (gen=$gen${maxBatch.fold("")(b => s", batch=$b")})" +
-          s" outlived retention at $root — gc/compaction retired the" +
-          " pinned generation. Pins live as long as their generation:" +
-          " keepGenerations later publishes for an unregistered pin;" +
-          " registerPin holds the generation against gc until" +
-          " releasePin or pin-lease expiry (graft.store.pinLeaseMs)")
-    genDir(root, gen)
+  /** Resolve `at` against `root` — the single resolution every
+    * store-served read and serve runs once per call. [[Head]] and
+    * [[AsOf]] resolve through [[tableRoot]] (loud on a dangling
+    * pointer). A [[Pin]] whose generation gc or compaction retired
+    * fails with a NAMED, actionable error (`who`, which pin, the
+    * retention rule, how to hold a generation) instead of the raw
+    * path-not-found a parquet scan would surface. Reference analogue:
+    * an SCN that fell off the relay's retention gets a named too-old
+    * answer (SCNNotFoundException) routing the client to bootstrap. */
+  def resolve(root: String, at: StoreAt,
+      who: String = "VersionedStore.resolve"): Resolved = at match {
+    case Head => Resolved(tableRoot(root), None)
+    case AsOf(mb) => Resolved(tableRoot(root), Some(mb))
+    case Pin(gen, mb) =>
+      if (!StoreFs.exists(s"${genDir(root, gen)}/$Marker"))
+        throw new IllegalStateException(
+          s"$who: pin (gen=$gen${mb.fold("")(b => s", batch=$b")})" +
+            s" outlived retention at $root — gc/compaction retired the" +
+            " pinned generation. Pins live as long as their generation:" +
+            " keepGenerations later publishes for an unregistered pin;" +
+            " registerPin holds the generation against gc until" +
+            " releasePin or pin-lease expiry (graft.store.pinLeaseMs)")
+      Resolved(genDir(root, gen), mb)
   }
 
   /** gc-visible pin registration — the reservation-lease idiom applied
@@ -539,7 +581,7 @@ object VersionedStore {
     * registrant that crashes without releasing must not pin the
     * generation's bytes forever on a multi-writer store. A too-short
     * lease never tears state — the pinned read after a sweep fails
-    * LOUDLY with [[pinnedGenerationRoot]]'s named error. Registration
+    * LOUDLY with [[resolve]]'s named error. Registration
     * requires the generation to be complete and present (you can only
     * register a pin you could resolve), and serializes with gc under
     * the maintenance lock so a register can never interleave with the
@@ -656,47 +698,33 @@ object VersionedStore {
       case n if n.startsWith("batch=") => n.drop(6)
     }.flatMap(v => scala.util.Try(v.toLong).toOption)
 
-  /** ONE (generation, maxBatch) time-travel coordinate of a versioned
-    * store — the shared capture behind [[Ann.pinIndex]] /
-    * [[Retrieval.pinPostings]] / [[Dedup.pinSignatureStore]] (each
-    * wraps it in its typed pin). Metadata-only: one pointer resolution
-    * plus one directory listing of the batch-carrying `table`, never a
-    * table scan. `maxBatch` is None on a store without the
-    * batch-addressed layout (generation is then the whole coordinate). */
-  private[graft] def pinCoordinate(storeDir: String, table: String,
-      who: String): (Long, Option[Long]) = {
-    val gen = currentGen(storeDir).getOrElse(
-      throw new IllegalStateException(s"$who: $storeDir has no published" +
-        " generation — only versioned stores carry a pinnable coordinate"))
-    (gen, batchIdsOf(s"${generationRoot(storeDir, gen)}/$table").maxOption)
+  /** Capture the CURRENT [[Pin]] of a versioned store: the flipped
+    * generation plus the highest append batch of its batch-carrying
+    * `table` (`cells`, `codes`, `postings`, `sigs`). Metadata-only: one
+    * pointer resolution plus one directory listing, never a table scan. */
+  def pin(root: String, table: String): Pin = {
+    val gen = currentGen(root).getOrElse(
+      throw new IllegalStateException(s"VersionedStore.pin: $root has no" +
+        " published generation — only versioned stores carry a pinnable" +
+        " coordinate"))
+    Pin(gen, batchIdsOf(s"${completeGenDir(root, gen, "pin")}/$table")
+      .maxOption)
   }
 
-  /** The live rows of `table` under an already-resolved generation dir,
-    * optionally pinned at a max append batch — the ONE read every
-    * family's pinned server shares: batches past the pin
-    * partition-prune out of the plan, the generation's own tombstone
-    * overlay still applies (erasure holds under time travel), and the
-    * layout `batch` column never reaches a consumer. */
-  private[graft] def liveRowsAt(spark: SparkSession, genRoot: String,
-      table: String, maxBatch: Option[Long], idCol: String): DataFrame = {
-    val raw = spark.read.parquet(s"$genRoot/$table")
-    val pinned = maxBatch match {
-      case None => raw
-      case Some(mb) =>
-        require(raw.columns.contains("batch"),
-          s"VersionedStore: $genRoot/$table carries no batch-addressed" +
-            s" layout but the pin names append batch $mb — pin and store" +
-            " disagree (a compaction that dropped the layout would be" +
-            " exactly this, and it never does)")
-        raw.where(col("batch") <= mb)
-    }
-    Tombstones.filterLive(pinned.drop("batch"), genRoot, idCol)
+  /** `gen-<gen>/` of `root`, loud when absent or incomplete (a crashed
+    * publish, or a generation gc'd past the retention the caller needs). */
+  private def completeGenDir(root: String, gen: Long, who: String): String = {
+    require(StoreFs.exists(s"${genDir(root, gen)}/$Marker"),
+      s"VersionedStore.$who: generation $gen at $root is absent or" +
+        " incomplete (crashed publish, or gc'd past the retention you" +
+        " need)")
+    genDir(root, gen)
   }
 
   /** O(request) takedown for a versioned store: append `ids` (one
     * LONG-castable column, [[Tombstones.appendDf]]'s contract) to the
     * tombstone overlay of EVERY retained complete generation — current
-    * AND pinned, because erasure must hold under [[readAsOfLive]] too
+    * AND pinned, because erasure must hold under a [[Pin]] bound too
     * (time travel never resurrects deleted rows). Request-sized × a
     * handful of generations; stored tables are never read or rewritten.
     * Serialized with publish/gc under the maintenance lock so a
@@ -768,40 +796,14 @@ object VersionedStore {
       throw new IllegalStateException(
         s"VersionedStore.read: no published generation at $root")))
 
-  /** [[read]] minus the current generation's tombstone overlay — the
-    * serving view of a versioned store table whose rows are keyed by
-    * `idCol`. No takedowns, no plan overhead; otherwise one broadcast
-    * anti-join ([[Tombstones.filterLive]]). */
-  def readLive(spark: SparkSession, root: String, table: String,
-      idCol: String): DataFrame = {
-    val t = tableRoot(root)
-    require(t != root, s"VersionedStore.readLive: $root has no pointer")
-    Tombstones.filterLive(spark.read.parquet(s"$t/$table"), t, idCol)
-  }
-
-  /** [[readAsOf]] minus generation `gen`'s tombstone overlay: pinned
-    * reproducibility for the APPEND history only — takedowns recorded
-    * after the pin still erase from it ([[takedownDf]] writes every
-    * retained generation), the same non-resurrection rule as
-    * [[Retrieval.readPostingsIndexAsOf]]. */
-  def readAsOfLive(spark: SparkSession, root: String, table: String,
-      gen: Long, idCol: String): DataFrame =
-    Tombstones.filterLive(readAsOf(spark, root, table, gen),
-      genDir(root, gen), idCol)
-
   /** Read `table` PINNED at generation `gen` — the whole-rebuild form
     * of snapshot reproducibility: a generation is immutable once
     * complete, so any consumer that records `gen` can replay the exact
     * store state it saw, regardless of later publishes (until [[gc]]
     * retires it, which is the caller's retention policy). */
   def readAsOf(spark: SparkSession, root: String, table: String,
-      gen: Long): DataFrame = {
-    require(StoreFs.exists(s"${genDir(root, gen)}/$Marker"),
-      s"VersionedStore.readAsOf: generation $gen at $root is absent or" +
-        " incomplete (crashed publish, or gc'd past the retention you" +
-        " need)")
-    spark.read.parquet(s"${genDir(root, gen)}/$table")
-  }
+      gen: Long): DataFrame =
+    spark.read.parquet(s"${completeGenDir(root, gen, "readAsOf")}/$table")
 
   /** RECOVERY for the crashed-flip states [[StoreFsck.versionedStore]]
     * reports (an unreferenced complete generation, a missing pointer
@@ -895,7 +897,7 @@ object VersionedStore {
               !liveReservation(g) && !livePin(root, g) => g
             // the livePin sparing applies ABOVE cur too: registerPin
             // accepts any complete generation (an unreferenced crashed
-            // publish is resolvable via pinnedGenerationRoot and may be
+            // publish is resolvable as a Pin and may be
             // adopt()'s recovery target), so sweeping a live-pinned one
             // here would break the "registerPin holds the generation
             // against gc" contract on exactly the generations an

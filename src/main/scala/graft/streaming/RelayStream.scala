@@ -86,7 +86,7 @@ object RelayStream {
       before.map(_._3).foldLeft(0L)(math.max) + 2)
     StoreFs.listFileStatusesRecursive(dir)
       .filter(f => f._2.startsWith("part-") && !beforePaths.contains(f._1))
-      .foreach { case (path, name, _) =>
+      .foreach { case (path, name, _, _) =>
         val k = name match { case PartNum(n) => n.toLong; case _ => 0L }
         // StoreFs.setModificationTime throws on failure: silently
         // keeping write-time mtimes would let the source admit parts

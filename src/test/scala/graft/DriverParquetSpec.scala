@@ -45,6 +45,22 @@ class DriverParquetSpec extends SparkSpec {
     assert(names.contains("_SUCCESS"), names.toString)
   }
 
+  test("marksuccessfuljobs=false suppresses the _SUCCESS marker like the distributed writer") {
+    val key = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
+    spark.conf.set(key, "false")
+    try {
+      val root = s"${tmp("dpq")}/nomarker"
+      VersionedStore.publish(root, Map("meta" -> localDf.coalesce(1)))
+      val ref = s"${tmp("dpq")}/nomarkerref"
+      localDf.coalesce(1).write.parquet(ref)
+      val names = StoreFs.listNames(s"${VersionedStore.tableRoot(root)}/meta")
+      assert(!StoreFs.listNames(ref).contains("_SUCCESS"),
+        "the distributed writer honors the setting")
+      assert(!names.contains("_SUCCESS"), names.toString)
+      assert(names.exists(_.startsWith("part-00000-")), names.toString)
+    } finally spark.conf.unset(key)
+  }
+
   test("a distributed frame still takes the distributed writer") {
     val root = s"${tmp("dpq")}/store2"
     val dist = spark.range(100)

@@ -6,7 +6,7 @@ import graft.pipeline.{Ann, PlanCache, VersionedStore}
 
 /** The driver-side quantizer memos (codebook trainings, PQ books,
   * centroid collects) key on [[PlanCache.contentKey]] — the plan PLUS
-  * each file root's (path, mtime) listing — so a table rewritten IN
+  * each file root's (path, mtime, length) listing — so a table rewritten IN
   * PLACE at the same path within one JVM loads fresh instead of
   * serving the stale quantizer. Generation-addressed stores never hit
   * this (immutable dirs, new publish = new path), but readPqBooksAt
@@ -72,6 +72,26 @@ class MemoFreshnessSpec extends SparkSpec {
       b1.zip(b2).forall { case (x, y) => math.abs(y - x - 50.0f) < 1e-3 },
       "trainCentroids served a stale memoized codebook after an" +
         " in-place corpus rewrite")
+  }
+
+  test("a same-name, same-mtime rewrite with a different length changes the salt") {
+    import graft.pipeline.StoreFs
+    val dir = s"${tmp("memo")}/t"
+    Seq(1L).toDF("id").coalesce(1).write.parquet(dir)
+    val df = spark.read.parquet(dir)
+    val before = PlanCache.fileSalt(df)
+    val (path, _, mtime, len) = StoreFs.listFileStatusesRecursive(dir)
+      .find(_._2.endsWith(".parquet")).get
+    // a non-Spark rewrite of the SAME file name whose mtime lands on the
+    // old value (coarse-granularity filesystems, copy tools preserving
+    // times): only the length tells the two contents apart
+    val local = java.nio.file.Paths.get(new java.net.URI(path))
+    java.nio.file.Files.write(local, Array.fill[Byte](len.toInt + 7)(1))
+    StoreFs.setModificationTime(path, mtime)
+    assert(StoreFs.listFileStatusesRecursive(dir)
+      .exists(f => f._1 == path && f._3 == mtime && f._4 == len + 7))
+    assert(PlanCache.fileSalt(df) != before,
+      "the content salt must change when a file's length does")
   }
 
   test("PlanCache.clear clears the quantizer memos too") {

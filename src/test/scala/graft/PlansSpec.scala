@@ -501,7 +501,7 @@ class PlansSpec extends SparkSpec {
 
   test("batch-regime ANN serving shuffles the probe join — no literal," +
       " no driver collect in the plan") {
-    // ivfQuantizedTopKFromStoreBatch is the corpus-sized-query regime:
+    // regime = Ann.Shuffle is the corpus-sized-query regime:
     // its plan identity is the ABSENCE of the request-sized path's
     // driver materialization — no probed-cell literal on the cells scan
     // (the tier scan is the stated trade) and no LocalRelation probe
@@ -517,15 +517,18 @@ class PlansSpec extends SparkSpec {
     // ALL THREE families' batch regimes carry the same plan identity
     // (batch parity, round 15): int8 IVF, raw IVF, IVF-PQ
     val regimes = Seq(
-      ("ivfQuantizedTopKFromStoreBatch",
-        graft.pipeline.Ann.ivfQuantizedTopKFromStoreBatch(
-          all, all, store, k = 5, nProbe = 2)),
-      ("ivfTopKFromStoreBatch",
-        graft.pipeline.Ann.ivfTopKFromStoreBatch(
-          all, all, store, k = 5, nProbe = 2)),
-      ("ivfPqTopKFromStoreBatch",
-        graft.pipeline.Ann.ivfPqTopKFromStoreBatch(
-          all, all, pqStore, k = 5, nProbe = 2)))
+      ("ivfQuantizedTopKFromStore shuffle",
+        graft.pipeline.Ann.ivfQuantizedTopKFromStore(
+          all, all, store, k = 5, nProbe = 2,
+          regime = graft.pipeline.Ann.Shuffle)),
+      ("ivfTopKFromStore shuffle",
+        graft.pipeline.Ann.ivfTopKFromStore(
+          all, all, store, k = 5, nProbe = 2,
+          regime = graft.pipeline.Ann.Shuffle)),
+      ("ivfPqTopKFromStore shuffle",
+        graft.pipeline.Ann.ivfPqTopKFromStore(
+          all, all, pqStore, k = 5, nProbe = 2,
+          regime = graft.pipeline.Ann.Shuffle)))
     regimes.foreach { case (name, served) =>
       val plan = served.queryExecution.executedPlan.toString
       assert(!plan.linesIterator.exists(l =>

@@ -128,7 +128,8 @@ class VersionedDefaultStoresSpec extends SparkSpec {
     R.tombstoneDocs(spark, dir, Seq(1L))
     assert(!R.readPostingsIndex(spark, dir)
       .select("doc_id").as[Long].collect().toSet.contains(1L))
-    assert(VersionedStore.readAsOfLive(spark, dir, "doclens", g1, "doc_id")
+    assert(VersionedStore.resolve(dir, VersionedStore.Pin(g1, None))
+      .live(spark, "doclens", "doc_id")
       .select("doc_id").as[Long].collect().toSet == Set(0L, 2L, 3L))
     // ... while the overlay stays request-sized: stored tables untouched
     assert(VersionedStore.readAsOf(spark, dir, "doclens", g1).count() == 4L)
@@ -156,10 +157,10 @@ class VersionedDefaultStoresSpec extends SparkSpec {
       "batchId must bootstrap the batch-addressed layout at publish")
     R.appendToPostingsIndexBatch(
       docsDf.where(col("doc_id") % 3 === 1), dir, 1L)
-    val pin = R.pinPostings(dir)
+    val pin = VersionedStore.pin(dir, "postings")
     assert(pin.maxBatch.contains(1L), pin.toString)
     val terms = Seq("the", "of", "data")
-    val before = R.bm25TopKFromStorePinned(spark, dir, pin, terms, k = 10)
+    val before = R.bm25TopKFromStore(spark, dir, terms, k = 10, at = pin)
       .collect().toSet
     // BOTH axes move: one more append batch, then a compaction publish
     R.appendToPostingsIndexBatch(
@@ -167,33 +168,35 @@ class VersionedDefaultStoresSpec extends SparkSpec {
     R.compactPostingsIndex(spark, dir, keepGenerations = 1)
     assert(VersionedStore.currentGen(dir).exists(_ > pin.gen),
       "compaction must have published past the pinned generation")
-    assert(R.bm25TopKFromStorePinned(spark, dir, pin, terms, k = 10)
+    assert(R.bm25TopKFromStore(spark, dir, terms, k = 10, at = pin)
       .collect().toSet == before,
       "the pin must replay the exact scores it captured")
     // pinned membership is the two pinned batches' docs — BM25's N and
     // avgdl come from the pinned norms (corpus statistics pin too)
-    assert(R.readDocLengthsPinned(spark, dir, pin)
+    assert(R.readDocLengths(spark, dir, pin)
       .select("doc_id").as[Long].collect().toSet ==
       corpus.map(_._1).filter(_ % 3 != 2).toSet)
     // erasure recorded AFTER the pin still holds under it (takedowns fan
     // into every retained generation — time travel never resurrects)
     R.tombstoneDocs(spark, dir, Seq(0L))
-    assert(!R.readPostingsIndexPinned(spark, dir, pin)
+    assert(!R.readPostingsIndex(spark, dir, pin)
       .select("doc_id").as[Long].collect().toSet.contains(0L),
       "a takedown after the pin must still erase from the pinned read")
     // a pin whose generation gc retired fails LOUDLY with the NAMED
     // retention error, never substitutes
     VersionedStore.gc(dir, keep = 0)
     val stale = intercept[IllegalStateException] {
-      R.bm25TopKFromStorePinned(spark, dir, pin, terms, k = 10).collect()
+      R.bm25TopKFromStore(spark, dir, terms, k = 10, at = pin).collect()
     }
     assert(stale.getMessage.contains("outlived retention"),
       stale.getMessage)
-    // pinPostings on an unversioned root refuses — flat stores carry no
+    // pinning an unversioned root refuses — flat stores carry no
     // pinnable generation coordinate
     val flat = s"${tmp("vdef")}/flat"
     R.appendToPostingsIndexBatch(docsDf, flat, 0L)
-    intercept[IllegalStateException] { R.pinPostings(flat) }
+    intercept[IllegalStateException] {
+      VersionedStore.pin(flat, "postings")
+    }
   }
 
   test("dedup pin: one (gen, maxBatch) token replays across later appends AND a later publish") {
@@ -218,13 +221,13 @@ class VersionedDefaultStoresSpec extends SparkSpec {
     assert(StoreFsck.minhashStore(spark, dir).as[(String, Long)]
       .collect().toMap.forall(_._2 == 0L),
       "a replayed batch append must leave zero fsck findings")
-    val pin = D.pinSignatureStore(dir)
+    val pin = VersionedStore.pin(dir, "sigs")
     assert(pin.maxBatch.contains(1L), pin.toString)
     // pinned slice {batch 0, 1} = ids %3 ∈ {0,1}: twin pairs survive
     // only for bases d%3==0 (their twins land in slice 1)
     val expectPinned = corpus.map(_._1).filter(_ % 3 == 0)
       .map(d => (d, d + 100L)).toSet
-    val before = D.nearDupPairsFromStorePinned(spark, dir, pin)
+    val before = D.nearDupPairsFromStore(spark, dir, at = pin)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(before == expectPinned, before.toString)
     // BOTH axes move: one more append batch, then a compaction publish
@@ -235,11 +238,11 @@ class VersionedDefaultStoresSpec extends SparkSpec {
     assert(spark.read.parquet(s"${VersionedStore.tableRoot(dir)}/sigs")
       .columns.contains("batch"),
       "compaction must preserve the batch-addressed layout")
-    assert(D.nearDupPairsFromStorePinned(spark, dir, pin)
+    assert(D.nearDupPairsFromStore(spark, dir, at = pin)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet == before,
       "the pin must replay the exact pair set it captured")
     // the raw as-of read cuts at the same boundary post-compaction
-    assert(D.readSignatureStoreAsOf(spark, dir, 1L)
+    assert(D.readSignatureStore(spark, dir, VersionedStore.AsOf(1L))
       .select("id").as[Long].collect().toSet ==
       corpus.map(_._1).flatMap(d => Seq(d, d + 100L))
         .filter(_ % 3 != 2).toSet)
@@ -252,14 +255,14 @@ class VersionedDefaultStoresSpec extends SparkSpec {
       corpus.map(_._1).map(d => (d, d + 100L)).toSet)
     // erasure recorded AFTER the pin still holds under it
     D.tombstoneSignatures(spark, dir, Seq(0L))
-    assert(!D.readSignatureStorePinned(spark, dir, pin)
+    assert(!D.readSignatureStore(spark, dir, pin)
       .select("id").as[Long].collect().toSet.contains(0L),
       "a takedown after the pin must still erase from the pinned read")
     // a pin whose generation gc retired fails LOUDLY with the NAMED
     // retention error, never substitutes
     VersionedStore.gc(dir, keep = 0)
     val stale = intercept[IllegalStateException] {
-      D.nearDupPairsFromStorePinned(spark, dir, pin).collect()
+      D.nearDupPairsFromStore(spark, dir, at = pin).collect()
     }
     assert(stale.getMessage.contains("outlived retention"),
       stale.getMessage)
@@ -267,7 +270,9 @@ class VersionedDefaultStoresSpec extends SparkSpec {
     // generation; a FLAT-LAYOUT store refuses the batch append outright
     val flat = s"${tmp("vdef")}/dflat"
     D.appendToSignatureStoreBatch(twins, flat, 0L)
-    intercept[IllegalStateException] { D.pinSignatureStore(flat) }
+    intercept[IllegalStateException] {
+      VersionedStore.pin(flat, "sigs")
+    }
     val plain = s"${tmp("vdef")}/dplain"
     D.writeSignatureStore(docsDf, plain)
     intercept[IllegalArgumentException] {
@@ -287,12 +292,14 @@ class VersionedDefaultStoresSpec extends SparkSpec {
     // bytes, never serving)
     R.compactPostingsIndex(spark, dir, keepGenerations = 1)
     assert(VersionedStore.listGens(dir).map(_._1).sorted == Seq(2L, 3L))
-    assert(VersionedStore.readAsOfLive(spark, dir, "doclens", 2L, "doc_id")
+    assert(VersionedStore.resolve(dir, VersionedStore.Pin(2L, None))
+      .live(spark, "doclens", "doc_id")
       .select("doc_id").as[Long].collect().toSet ==
       Set(0L, 2L, 3L, 4L, 5L, 6L))
     // a takedown recorded NOW lands in both retained generations
     R.tombstoneDocs(spark, dir, Seq(4L))
-    assert(VersionedStore.readAsOfLive(spark, dir, "doclens", 2L, "doc_id")
+    assert(VersionedStore.resolve(dir, VersionedStore.Pin(2L, None))
+      .live(spark, "doclens", "doc_id")
       .select("doc_id").as[Long].collect().toSet ==
       Set(0L, 2L, 3L, 5L, 6L))
     assert(!R.readDocLengths(spark, dir)
@@ -339,7 +346,8 @@ class VersionedDefaultStoresSpec extends SparkSpec {
       s"pending flat takedown must survive the rebuild (got $served)")
     // pinned reads filter too (erasure is never resurrectable)
     val gen = VersionedStore.currentGen(dir).get
-    assert(!VersionedStore.readAsOfLive(spark, dir, "doclens", gen, "doc_id")
+    assert(!VersionedStore.resolve(dir, VersionedStore.Pin(gen, None))
+      .live(spark, "doclens", "doc_id")
       .select("doc_id").as[Long].collect().contains(1L))
     // the flat tables and the flat set are gone; fsck audits clean
     assert(StoreFs.listDirNames(dir).forall(_.startsWith("gen-")),

@@ -44,6 +44,57 @@ class VersionedStoreSpec extends SparkSpec {
     assert(fsck(root).values.forall(_ == 0L))
   }
 
+  test("resolve: every StoreAt bound reads the live rows it names") {
+    import graft.pipeline.Tombstones
+    import VersionedStore.{AsOf, Head, Pin}
+    def rows(ids: Long*) = ids.map(i => (i, s"v$i")).toDF("id", "v")
+    // a VERSIONED batch-addressed root: batch 0 published, batches 1
+    // and 2 appended inside the generation, the pin captured between
+    val root = tmp()
+    VersionedStore.publish(root, Map("t/batch=0" -> rows(1L, 2L)))
+    val t = VersionedStore.tableRoot(root)
+    rows(3L, 4L).write.parquet(s"$t/t/batch=1")
+    val pin = VersionedStore.pin(root, "t")
+    assert(pin == Pin(1L, Some(1L)), pin.toString)
+    rows(5L, 6L).write.parquet(s"$t/t/batch=2")
+    // an UNVERSIONED batch-addressed root (what the append…Batch forms
+    // create on a fresh dir): no pointer, batch dirs at the root
+    val flat = tmp()
+    rows(1L, 2L).write.parquet(s"$flat/t/batch=0")
+    rows(3L, 4L).write.parquet(s"$flat/t/batch=1")
+    // takedowns recorded AFTER every capture apply under every bound
+    VersionedStore.takedownDf(Seq(1L).toDF("id"), root)
+    Tombstones.appendDf(Seq(1L).toDF("id"), flat)
+    Seq[(String, VersionedStore.StoreAt, Set[Long])](
+      (root, Head, Set(2L, 3L, 4L, 5L, 6L)),
+      (root, AsOf(0L), Set(2L)),
+      (root, AsOf(1L), Set(2L, 3L, 4L)),
+      (root, pin, Set(2L, 3L, 4L)),
+      (root, Pin(1L, None), Set(2L, 3L, 4L, 5L, 6L)),
+      (flat, Head, Set(2L, 3L, 4L)),
+      (flat, AsOf(0L), Set(2L))
+    ).foreach { case (r, at, want) =>
+      val live = VersionedStore.resolve(r, at).live(spark, "t", "id")
+      assert(!live.columns.contains("batch"), s"$at on $r")
+      assert(live.select("id").as[Long].collect().toSet == want,
+        s"$at on $r")
+    }
+    // the refusals: a batch bound on a store with no batch column, a pin
+    // on an unversioned root, a pin whose generation gc retired
+    val plain = tmp()
+    VersionedStore.publish(plain, Map("t" -> rows(1L)))
+    intercept[IllegalArgumentException] {
+      VersionedStore.resolve(plain, AsOf(0L)).live(spark, "t", "id")
+    }
+    intercept[IllegalStateException] { VersionedStore.pin(flat, "t") }
+    VersionedStore.publish(root, Map("t" -> rows(7L)))
+    VersionedStore.gc(root, keep = 0)
+    val e = intercept[IllegalStateException] {
+      VersionedStore.resolve(root, pin)
+    }
+    assert(e.getMessage.contains("outlived retention"), e.getMessage)
+  }
+
   test("versioned reads scan ONLY the pointed generation's files") {
     val root = tmp()
     VersionedStore.publish(root, Map("t" -> Seq((1L, "g1")).toDF("id", "v")))
@@ -170,11 +221,13 @@ class VersionedStoreSpec extends SparkSpec {
     VersionedStore.takedownDf(Seq(2L).toDF("id"), root)
     VersionedStore.commit(root, gen, token, Set("t"), spark)
     assert(VersionedStore.currentGen(root).contains(gen))
-    assert(VersionedStore.readLive(spark, root, "t", "id")
+    assert(VersionedStore.resolve(root, VersionedStore.Head)
+      .live(spark, "t", "id")
       .select("v").as[String].collect().toSeq == Seq("a2"),
       "the erased id must not serve from the generation published around" +
         " the takedown")
-    assert(VersionedStore.readAsOfLive(spark, root, "t", 1L, "id")
+    assert(VersionedStore.resolve(root, VersionedStore.Pin(1L, None))
+      .live(spark, "t", "id")
       .select("v").as[String].collect().toSeq == Seq("a"))
   }
 
@@ -261,14 +314,14 @@ class VersionedStoreSpec extends SparkSpec {
     assert(StoreFs.exists(s"$root/gen-1/_COMPLETE"),
       "a live registered pin must hold its generation against gc")
     // the pinned read works the whole time
-    assert(VersionedStore.pinnedGenerationRoot(root, 1L, None, "spec")
-      .endsWith("gen-1"))
+    assert(VersionedStore.resolve(root, VersionedStore.Pin(1L, None), "spec")
+      .dir.endsWith("gen-1"))
     assert(fsck(root)("expired_pin_files") == 0L)
     // release → the next gc retires it, and the resolve fails NAMED
     VersionedStore.releasePin(root, 1L, token)
     assert(VersionedStore.gc(root, keep = 0) == Seq(1L))
     val e = intercept[IllegalStateException] {
-      VersionedStore.pinnedGenerationRoot(root, 1L, Some(7L), "spec")
+      VersionedStore.resolve(root, VersionedStore.Pin(1L, Some(7L)), "spec")
     }
     assert(e.getMessage.contains("outlived retention"), e.getMessage)
     assert(e.getMessage.contains("gen=1") &&
@@ -318,11 +371,13 @@ class VersionedStoreSpec extends SparkSpec {
     // generation would serve the erased id
     VersionedStore.commit(root, genB, tokenB, Set("t"), spark)
     Seq(genA, genB).foreach { g =>
-      assert(!VersionedStore.readAsOfLive(spark, root, "t", g, "id")
+      assert(!VersionedStore.resolve(root, VersionedStore.Pin(g, None))
+        .live(spark, "t", "id")
         .select("id").as[Long].collect().contains(2L),
         s"generation $g serves the id erased under the flat layout")
     }
-    assert(!VersionedStore.readLive(spark, root, "t", "id")
+    assert(!VersionedStore.resolve(root, VersionedStore.Head)
+      .live(spark, "t", "id")
       .select("id").as[Long].collect().contains(2L))
   }
 
@@ -340,7 +395,8 @@ class VersionedStoreSpec extends SparkSpec {
         "exclusive protocol writes flip markers, never a mutable pointer")
       assert(StoreFs.exists(s"$root/_POINTER.1"))
       assert(VersionedStore.isVersioned(root))
-      assert(VersionedStore.readLive(spark, root, "t", "id").count() == 1L)
+      assert(VersionedStore.resolve(root, VersionedStore.Head)
+        .live(spark, "t", "id").count() == 1L)
       val g2 = VersionedStore.publish(root,
         Map("t" -> Seq((2L, "b")).toDF("id", "v")))
       assert(g2 == 2L && VersionedStore.currentGen(root).contains(2L))
@@ -517,8 +573,8 @@ class VersionedStoreSpec extends SparkSpec {
       "gc must spare a live-pinned unreferenced complete generation")
     assert(StoreFs.exists(s"$root/gen-2/_COMPLETE"))
     // the pinned read resolves the whole time; adopt can still recover it
-    assert(VersionedStore.pinnedGenerationRoot(root, 2L, None, "spec")
-      .endsWith("gen-2"))
+    assert(VersionedStore.resolve(root, VersionedStore.Pin(2L, None), "spec")
+      .dir.endsWith("gen-2"))
     VersionedStore.releasePin(root, 2L, tok)
     assert(VersionedStore.gc(root, keep = 0) == Seq(2L),
       "released, the unreferenced publish is gc fodder again")
