@@ -174,16 +174,11 @@ object Bench {
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
       s""""qn":${names.size},"qms":$qms,"failed":$failedJson,""" +
       s""""setup_sec":$setupR,""" +
+      // the sf0.1 relay legs are JVM-warmth floor measurements: how to
+      // read them is SCALING.md's "Reading the bench's relay_* fields"
       s""""relay_events_per_sec":${eventsPerSec.round},"relay_events":$nEvents,""" +
       s""""relay_binary_events_per_sec":${binEps.round},""" +
       s""""relay_wire_events_per_sec":${wireEps.round},""" +
-      // the sf0.1 relay legs finish in ~0.2 s — JVM-warmth floor
-      // territory; the artifact says so itself so no future round
-      // re-runs the round-12 adjudication on a ±40% flag-churn
-      s""""relay_note":"sf0.1 legs are warmth-bound floor measurements""" +
-      s""" (SCALING.md round-12 adjudication; solo fresh-JVM floor 143k,""" +
-      s""" band 306k-526k); the scale-honest sf1 legs are flat ~1.6M""" +
-      s""" ev/s (ScaleProbe relay)",""" +
       // echo the harness contract: the master really is local[$cpus]
       // (Bench honors SPARK_GRAFT_CPUS for master AND shuffle
       // partitions); carrying it in the artifact lets the driver's

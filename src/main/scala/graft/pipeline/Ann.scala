@@ -1633,8 +1633,8 @@ object Ann {
     // the persisted scan is salted too: a plan-keyed persist would pin
     // the OLD file listing (or stale cached rows) after an in-place
     // same-path corpus rewrite — MemoFreshnessSpec pins the retrain
-    val c = PlanCache.getOrPersist(corpus, s"kmeans-corpus|$k$salt",
-      corpus.select(col("id").cast("long").as("id"), col("vec")))
+    val c = PlanCache.getOrPersist(corpus, s"kmeans-corpus|$k",
+      corpus.select(col("id").cast("long").as("id"), col("vec")), salt)
     var cents = c.orderBy(col("id")).limit(k).collect()
       .zipWithIndex
       .map { case (r, i) => (i.toLong, r.getSeq[Float](1).toSeq) }

@@ -1330,19 +1330,11 @@ object Dedup {
           .otherwise(0L)).as("changed"))
         .localCheckpoint(true) // the one job; fires the observation too
       // the checkpoint is synchronous, so the metric is normally already
-      // here; `obs.get` blocks until the observation fires, so bound it
-      // with a timed Future and fall back to a probe over the
-      // checkpointed (in-memory) partitions — never a hang
-      val metrics: Map[String, Any] =
-        try {
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.duration.DurationInt
-          import scala.concurrent.ExecutionContext.Implicits.global
-          Await.result(Future(obs.get), 5.seconds)
-        } catch { case _: java.util.concurrent.TimeoutException => Map.empty }
-      converged = metrics.get("changed") match {
-        case Some(c: java.lang.Long) => c.longValue == 0L
-        case _ => next.where(col("label") =!= col("prev")).isEmpty
+      // here; without it (or over no rows: a null sum), probe the
+      // checkpointed (in-memory) partitions instead
+      converged = PlanCache.observed(obs).filterNot(_.isNullAt(0)) match {
+        case Some(m) => m.getLong(0) == 0L
+        case None => next.where(col("label") =!= col("prev")).isEmpty
       }
       // next is materialized (eager checkpoint) — the previous round's
       // blocks are dead; free them instead of waiting on ContextCleaner

@@ -1,6 +1,11 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.TimeoutException
+
+import scala.concurrent.Await
+import scala.concurrent.duration.DurationInt
+
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** Idempotent persist for derived signature tables.
@@ -22,34 +27,45 @@ import org.apache.spark.storage.StorageLevel
   *
   * Caveat: the key is the plan, not the data — if the files under an
   * identical plan change in place, call [[clear]] to drop stale
-  * signatures (normal pipelines write immutable snapshot dirs).
+  * signatures (normal pipelines write immutable snapshot dirs), or pass
+  * the frame's [[fileSalt]] as `salt`: an entry persisted under another
+  * salt is then unpersisted and replaced.
   */
 private[graft] object PlanCache {
 
   /** Per-session LRU bound; evicted entries are unpersisted. */
   private val MaxEntriesPerSession = 64
 
-  private val sessions =
-    new java.util.WeakHashMap[SparkSession, java.util.LinkedHashMap[String, DataFrame]]
+  /** Per session: (params, plan) key → (salt, persisted frame). */
+  private val sessions = new java.util.WeakHashMap[SparkSession,
+    java.util.LinkedHashMap[String, (String, DataFrame)]]
+
+  private def unpersistQuietly(df: DataFrame): Unit =
+    try df.unpersist() catch { case _: Throwable => () }
 
   def getOrPersist(input: DataFrame, params: String,
-      build: => DataFrame): DataFrame = synchronized {
+      build: => DataFrame, salt: String = ""): DataFrame = synchronized {
     val perSession = sessions.computeIfAbsent(input.sparkSession, _ =>
-      new java.util.LinkedHashMap[String, DataFrame](16, 0.75f, true) {
+      new java.util.LinkedHashMap[String, (String, DataFrame)](16, 0.75f, true) {
         override def removeEldestEntry(
-            e: java.util.Map.Entry[String, DataFrame]): Boolean =
+            e: java.util.Map.Entry[String, (String, DataFrame)]): Boolean =
           if (size > MaxEntriesPerSession) {
-            try e.getValue.unpersist()
-            catch { case _: Throwable => () }
+            unpersistQuietly(e.getValue._2)
             true
           } else false
       })
     val key = params + "|" + planKey(input)
     val hit = perSession.get(key)
-    if (hit != null) hit
+    if (hit != null && hit._1 == salt) hit._2
     else {
+      // a new salt over a live entry: the files under the same plan
+      // changed, and Spark's CacheManager matches cached data by plan —
+      // unless a Spark writer refreshed it, a persist now would dedupe
+      // onto the old InMemoryRelation and serve its stale rows, so drop
+      // that first
+      if (hit != null) unpersistQuietly(hit._2)
       val df = build.persist(StorageLevel.MEMORY_AND_DISK)
-      perSession.put(key, df)
+      perSession.put(key, (salt, df))
       df
     }
   }
@@ -147,6 +163,15 @@ private[graft] object PlanCache {
       case _ => ()
     }
 
+  /** The metrics row of an `observe()` whose action has already run (an
+    * eager `localCheckpoint` fires it), or None when it has not arrived
+    * within five seconds: listener delivery is asynchronous, so callers
+    * bound the wait and recompute from the materialized frame, never
+    * hang. */
+  def observed(obs: Observation): Option[Row] =
+    try Some(Await.result(obs.future, 5.seconds))
+    catch { case _: TimeoutException => None }
+
   /** Sibling driver-side memos (e.g. [[Ann]]'s quantizer loads)
     * register a clear hook so [[clear]] empties them too — one call
     * resets every plan/content-keyed cache in the JVM. */
@@ -158,8 +183,7 @@ private[graft] object PlanCache {
   def clear(): Unit = {
     synchronized {
       sessions.values.forEach { m =>
-        m.values.forEach(df =>
-          try df.unpersist() catch { case _: Throwable => () })
+        m.values.forEach(e => unpersistQuietly(e._2))
         m.clear()
       }
       sessions.clear()

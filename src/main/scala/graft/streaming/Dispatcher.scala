@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, ForeachWriter, Row}
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.model.Checkpoint
+import graft.pipeline.PlanCache
 
 /** One delivered change event (typed dispatcher surface). */
 case class EnvelopeRow(
@@ -54,17 +55,31 @@ case class MultiConsumer(consumers: Seq[DatabusConsumer]) extends DatabusConsume
 }
 
 /** Ordered, windowed delivery of a relay stream into consumer callbacks —
-  * the client dispatcher (K3) re-expressed as `foreachBatch`:
+  * the client dispatcher (K3) re-expressed as `foreachBatch`. Each
+  * micro-batch is read once, as the reference dispatcher makes one pass
+  * per window of events (GenericDispatcher.java:420-459):
   *
-  *  - per micro-batch: repartition by physical partition, sort within
-  *    partition by (scn, seq) — the reference's per-timeline total order
-  *    (GenericDispatcher.java:420-459);
-  *  - iterate rows per partition, emitting start/end-window callbacks at
-  *    scn boundaries (EOW markers are implicit: scn change = window done,
-  *    valid because batches hold whole windows);
-  *  - checkpoint on batch commit; task failure → micro-batch replay ⇒
-  *    at-least-once with rollback, same contract as the reference
-  *    (consumer must be idempotent, as there).
+  *  - stage: one job decodes and filters the batch, repartitions it by
+  *    physical partition, sorts within partition by (scn, seq) — the
+  *    reference's per-timeline total order — and keeps the rows as
+  *    `localCheckpoint` blocks; the same job fires an `observe()` of the
+  *    batch's min/max scn;
+  *  - regress check: a batch minimum below the committed watermark fires
+  *    `onRollback` before any event is delivered (C5);
+  *  - deliver: iterate the staged rows per partition, emitting start/end
+  *    window callbacks at scn boundaries (EOW markers are implicit: scn
+  *    change = window done, valid because batches hold whole windows);
+  *    the staged blocks are freed afterwards, also when a consumer
+  *    rejects an event;
+  *  - checkpoint on batch commit with the batch maximum; task failure →
+  *    micro-batch replay ⇒ at-least-once with rollback, same contract as
+  *    the reference (consumer must be idempotent, as there).
+  *
+  * Trade-off: the staged blocks live on executors only, so a lost
+  * executor fails the batch instead of recomputing a partition; the batch
+  * then replays from the last committed checkpoint, so delivery stays
+  * at-least-once (the discipline of every other `localCheckpoint(true)`
+  * `foreachBatch` body in the engine).
   */
 object Dispatcher {
 
@@ -75,31 +90,37 @@ object Dispatcher {
     val writer = stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         import batch.sparkSession.implicits._
-        // one bounds job per batch (min+max+maxSeq together), shared by
-        // the regress check before delivery and the checkpoint after
-        val bounds = batch.agg(min("scn"), max("scn"), max("seq")).head()
-        if (!bounds.isNullAt(0) && bounds.getLong(0) < watermark.get())
-          consumer.onRollback(Checkpoint.online(bounds.getLong(0)))
-        val delivered = batch
+        val obs = Observation(s"dispatch_bounds_$batchId")
+        val staged = batch
+          .observe(obs, min("scn"), max("scn"))
           .repartition(col("partition_id"))
           .sortWithinPartitions(col("partition_id"), col("scn"), col("seq"))
-          .as[EnvelopeRow]
-        delivered.foreachPartition { (rows: Iterator[EnvelopeRow]) =>
-          var openScn = Long.MinValue
-          var openPartition = Int.MinValue
-          rows.foreach { e =>
-            if (e.partition_id != openPartition || e.scn != openScn) {
-              if (openScn != Long.MinValue) consumer.onEndWindow(openScn)
-              consumer.onStartWindow(e.scn)
-              openScn = e.scn
-              openPartition = e.partition_id
+          .localCheckpoint(true) // the one source read; fires `obs` too
+        val bounds = try {
+          // (min scn, max scn); should the observation not arrive, one
+          // aggregate over the staged rows, never a second source read
+          val b = PlanCache.observed(obs)
+            .getOrElse(staged.agg(min("scn"), max("scn")).head())
+          if (!b.isNullAt(0) && b.getLong(0) < watermark.get())
+            consumer.onRollback(Checkpoint.online(b.getLong(0)))
+          staged.as[EnvelopeRow].foreachPartition { (rows: Iterator[EnvelopeRow]) =>
+            var openScn = Long.MinValue
+            var openPartition = Int.MinValue
+            rows.foreach { e =>
+              if (e.partition_id != openPartition || e.scn != openScn) {
+                if (openScn != Long.MinValue) consumer.onEndWindow(openScn)
+                consumer.onStartWindow(e.scn)
+                openScn = e.scn
+                openPartition = e.partition_id
+              }
+              if (!consumer.onEvent(e))
+                throw new IllegalStateException(
+                  s"consumer rejected event seq=${e.seq} (rollback)")
             }
-            if (!consumer.onEvent(e))
-              throw new IllegalStateException(
-                s"consumer rejected event seq=${e.seq} (rollback)")
+            if (openScn != Long.MinValue) consumer.onEndWindow(openScn)
           }
-          if (openScn != Long.MinValue) consumer.onEndWindow(openScn)
-        }
+          b
+        } finally PlanCache.freeLocalCheckpoint(staged)
         // driver-side checkpoint callback with the batch high-watermark;
         // windowOffset = -1 marks the watermark window fully consumed
         // (the reference's FULLY_CONSUMED_WINDOW_OFFSET, Checkpoint.java:
@@ -114,16 +135,6 @@ object Dispatcher {
       .option("checkpointLocation", checkpointDir)
     (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
   }
-
-  /** dtail (K4): console tail of a stream — formats JSON-ish rows, `-n`
-    * row cap per batch (DtailCliBase.java:34-60 surface). */
-  def dtail(stream: DataFrame, numRows: Int = 20): StreamingQuery =
-    stream.writeStream
-      .format("console")
-      .option("numRows", numRows)
-      .option("truncate", false)
-      .trigger(Trigger.AvailableNow())
-      .start()
 
   /** File-logging consumer sink (K5): persist every delivered event. */
   def fileLog(stream: DataFrame, outDir: String, checkpointDir: String): StreamingQuery =

@@ -74,6 +74,37 @@ class MemoFreshnessSpec extends SparkSpec {
         " in-place corpus rewrite")
   }
 
+  test("a corpus part file rewritten outside Spark retrains over the fresh rows") {
+    import java.nio.file.{Files, Path, StandardCopyOption}
+    val root = tmp("memo")
+    val corpusPath = s"$root/corpus"
+    (0L until 12L).map(i => (i, vec(i))).toDF("id", "vec")
+      .coalesce(1).write.parquet(corpusPath)
+    val (book1, _) =
+      Ann.trainCentroids(spark.read.parquet(corpusPath), 2, 2)
+    // the shifted corpus is written elsewhere, then copied over the
+    // corpus part file with java.nio: no DataFrameWriter touches the
+    // corpus path, so nothing refreshes Spark's cached rows of it
+    val staging = s"$root/staging"
+    (0L until 12L).map(i => (i, vec(i).map(_ + 50.0f))).toDF("id", "vec")
+      .coalesce(1).write.parquet(staging)
+    def part(dir: String): Path = new java.io.File(dir).listFiles()
+      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+      .get.toPath
+    val target = part(corpusPath)
+    Files.copy(part(staging), target, StandardCopyOption.REPLACE_EXISTING)
+    // the local filesystem verifies a .crc sidecar on read: drop the old one
+    Files.deleteIfExists(target.resolveSibling(s".${target.getFileName}.crc"))
+    val (book2, _) =
+      Ann.trainCentroids(spark.read.parquet(corpusPath), 2, 2)
+    val b1 = book1.flatMap(_._2)
+    val b2 = book2.flatMap(_._2)
+    assert(b1.length == b2.length &&
+      b1.zip(b2).forall { case (x, y) => math.abs(y - x - 50.0f) < 1e-3 },
+      "trainCentroids trained over stale cached rows after a non-Spark" +
+        " rewrite of the corpus part file")
+  }
+
   test("a same-name, same-mtime rewrite with a different length changes the salt") {
     import graft.pipeline.StoreFs
     val dir = s"${tmp("memo")}/t"

@@ -18,7 +18,8 @@ class StreamingSpec extends SparkSpec {
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toString
 
-  import StreamingSpec.{Collector, CollectingConsumer}
+  import StreamingSpec.{Collector, CollectingConsumer, RejectingConsumer,
+    Trail, TrailConsumer}
 
   private lazy val envelope = ChangeFeed.envelope(spark, sf()) // 1000 events
 
@@ -155,6 +156,70 @@ class StreamingSpec extends SparkSpec {
     assert(Collector.events.size == 1000)
   }
 
+  test("scn regress: rollback precedes the regressed batch, checkpoints carry its max") {
+    val logDir = tmp("eventlog_rb")
+    RelayStream.writeEventLog(envelope.where($"scn" >= 500), logDir, filesHint = 1)
+    RelayStream.writeEventLog(envelope.where($"scn" < 500), logDir, filesHint = 1)
+    Trail.calls.clear()
+    Dispatcher.start(RelayStream.read(spark, logDir, maxFilesPerTrigger = 1),
+      new TrailConsumer, tmp("cp_rb")).awaitTermination()
+    // the trail is one ordered log: event callbacks of a batch all land
+    // between the driver-side callbacks that bracket it
+    val trail = Trail.calls.toArray(Array.empty[(String, Long)])
+    var batch = Vector.empty[Long]       // scns delivered since the last checkpoint
+    var rollback = Option.empty[Long]    // rollback fired for the open batch
+    var watermark = Long.MinValue
+    var rollbacks = 0
+    trail.foreach {
+      case ("rollback", scn) =>
+        assert(batch.isEmpty, s"rollback($scn) after ${batch.size} events of its batch")
+        assert(scn < watermark)
+        rollback = Some(scn); rollbacks += 1
+      case ("event", scn) => batch :+= scn
+      case ("checkpoint", scn) =>
+        assert(batch.nonEmpty && scn == batch.max,
+          s"checkpoint($scn) is not its batch's max scn")
+        rollback.foreach(r => assert(r == batch.min, s"rollback($r) is not the batch min"))
+        assert(rollback.isDefined == (batch.min < watermark))
+        watermark = math.max(watermark, scn)
+        batch = Vector.empty; rollback = None
+      case other => fail(s"unexpected callback $other")
+    }
+    assert(batch.isEmpty && rollbacks >= 1)
+    assert(trail.count(_._1 == "event") == 1000)
+  }
+
+  test("dispatch reads each micro-batch from the source once") {
+    val logDir = tmp("eventlog_once")
+    RelayStream.writeEventLog(envelope, logDir, filesHint = 4)
+    // bumped once per source row evaluated, in the stream's own filter
+    val reads = spark.sparkContext.longAccumulator("dispatch_source_reads")
+    val counted = udf { (_: Long) => reads.add(1L); true }.asNondeterministic()
+    Collector.clear()
+    Dispatcher.start(
+      RelayStream.read(spark, logDir, maxFilesPerTrigger = 2).where(counted($"seq")),
+      new CollectingConsumer, tmp("cp_once")).awaitTermination()
+    assert(Collector.events.size == 1000)
+    assert(reads.value == 1000L,
+      s"the source was read ${reads.value / 1000.0} times per delivered event")
+  }
+
+  test("dispatch frees its staged blocks, also when a consumer rejects an event") {
+    val logDir = tmp("eventlog_free")
+    RelayStream.writeEventLog(envelope, logDir, filesHint = 4)
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
+    Collector.clear()
+    Dispatcher.start(RelayStream.read(spark, logDir, maxFilesPerTrigger = 2),
+      new CollectingConsumer, tmp("cp_free")).awaitTermination()
+    assert(Collector.events.size == 1000)
+    assert(persisted == before, "a clean drain left staged blocks behind")
+    val q = Dispatcher.start(RelayStream.read(spark, logDir, maxFilesPerTrigger = 2),
+      new RejectingConsumer, tmp("cp_free_rejected"))
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.awaitTermination())
+    assert(persisted == before, "a rejected drain left staged blocks behind")
+  }
+
   test("continuous applier materializes latest-per-key across batches (K6)") {
     val logDir = tmp("eventlog7")
     val stateDir = tmp("state7")
@@ -275,5 +340,23 @@ object StreamingSpec {
       Collector.windows.add(("end", scn))
     override def onCheckpoint(cp: Checkpoint): Unit =
       Collector.checkpoints.add(cp.windowScn)
+  }
+
+  /** Every callback in arrival order, (kind, scn). */
+  object Trail {
+    val calls = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]()
+  }
+
+  class TrailConsumer extends DatabusConsumer {
+    override def onEvent(e: EnvelopeRow): Boolean = { Trail.calls.add(("event", e.scn)); true }
+    override def onCheckpoint(cp: Checkpoint): Unit =
+      Trail.calls.add(("checkpoint", cp.windowScn))
+    override def onRollback(cp: Checkpoint): Unit =
+      Trail.calls.add(("rollback", cp.windowScn))
+  }
+
+  /** Rejects every event: each batch fails (the rollback path). */
+  class RejectingConsumer extends DatabusConsumer {
+    override def onEvent(e: EnvelopeRow): Boolean = false
   }
 }
